@@ -55,7 +55,7 @@ object Sessions {
       // window/join exchanges) — opens R FILES PER MAP TASK and then
       // concatenates them; with R = this engine's conf'd shuffle width,
       // that is R× the file creates of the sort writer's one
-      // data+index pair per task. ProfileStages plan metrics showed
+      // data+index pair per task. r20 per-stage plan metrics showed
       // 85-200 ms of shuffleWriteTime PER TASK on exchanges carrying a
       // few KB (q51's batch-prep exchanges: 2.7-6.7 s summed per
       // exchange), and disabling bypass measured q117 2.1→1.4 s /

@@ -142,7 +142,7 @@ object IpRangeLookup {
   */
 /** The E1 `HandleMsg` composition (input/kafka_sarama.go:11670-11674):
   * `SearchIP` then `ReplaceUnknown`, as one structured pipeline stage for
-  * TaskRunner's `enrich` hook (gated by the task's `geoipHandle`). */
+  * TaskRunner's `enrich` hook. */
 object Enrich {
   def handleMsg(spark: org.apache.spark.sql.SparkSession, ranges: Seq[IpRange])
       (df: DataFrame): DataFrame =

@@ -238,7 +238,7 @@ object Ann {
       }
     }
     // the checkpointed sample's blocks are released by the callers'
-    // standard between-query leftover release (Bench/TimeQ/Verify);
+    // standard between-query leftover release (Bench/Verify);
     // nothing to unpersist here — localCheckpoint blocks cannot be
     // dropped while derived plans might still re-execute
     cents

@@ -19,8 +19,9 @@ import graft.Tables
   * grams (naive gram-bucket join: ~(0.1·N)² candidate pairs from the
   * header bucket alone), while the rare-first prefix order pushes the
   * hot grams OUT of every probe prefix and keeps candidates
-  * near-linear ([[graft.tools.ProfileSkew]] measures this;
-  * PLANS.md "Skew-adversary decomposition" records the curve).
+  * near-linear (r14, sf0.1 → sf1 at 10.25× data: distinct candidates
+  * 15.0× vs 52.8× for the naive all-gram volume; PLANS.md
+  * "Skew-adversary decomposition" records the curve).
   *
   * Both gates are exhaustive-oracle checked: DuckDB replays the header
   * plant and scans ALL pairs, so the blocking layer must stay lossless
@@ -85,8 +86,9 @@ object Round15 {
     * grams sort LAST under the rare-first canonical order, so no probe
     * prefix contains one and the header buckets are never pair-expanded
     * ([[graft.operators.JaccardJoin]] step 2-3); the exhaustive oracle
-    * proves losslessness, [[graft.tools.ProfileSkew]] proves the
-    * candidate set stays near-linear. */
+    * proves losslessness, and the r14 sf0.1 → sf1 measurement
+    * (175,601 → 2,629,540 distinct candidates at 10.25× data) showed
+    * the candidate set stays near-linear. */
   def q114JaccardSkew(s: SparkSession, dir: String): DataFrame =
     graft.operators.JaccardJoin.nearDupPairs(jaccardSkewDocs(s, dir),
       "doc_id", "text", k = 3, minJaccard = 0.8)

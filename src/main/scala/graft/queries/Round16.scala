@@ -20,9 +20,9 @@ import graft.Tables
   * representative in ONE map-side-combined fingerprint shuffle, the
   * containment join then sees each distinct body once, and both
   * candidates and output return to data-proportional —
-  * [[graft.tools.ProfileSkew]]'s boilerplate section measures the
-  * cohort's candidate contribution staying linear at 10× data while
-  * the uncollapsed path grows ~100×.
+  * measured r16 (sf0.1 → sf1 at 10× data), the cohort's candidate
+  * contribution stayed linear (1,505 → 15,005, 9.97×) while the
+  * uncollapsed path grew ~100× (180,361 → 18,053,611).
   *
   * The gate is exhaustive-oracle checked: DuckDB replays the plant AND
   * the collapse (group by lower/trim, min-id representative), then

@@ -30,7 +30,7 @@ import graft.functions.ColumnBridge
   * `RocksDBStateStoreProvider` (+ changelog checkpointing): state moves
   * off-heap and spills to local disk, so state size is unbounded — and on
   * this workload it isn't even a throughput trade (r7 measurement on the
-  * 450 K-key bench intake, `tools/StateStoreBench`: 9.3 s HDFS vs 8.3 s
+  * 450 K-key bench intake, 8 micro-batches: 9.3 s HDFS vs 8.3 s
   * RocksDB vs 6.9 s for the native-operator path below; RocksDB's
   * maintenance work overlaps the heap store's snapshot cost). Both
   * providers pass this operator's restart spec.
@@ -122,7 +122,7 @@ object StatefulDedup {
     * closure per group. (`StreamingDeduplicateExec` itself is outside
     * whole-stage codegen, as all stateful operators are; the win is the
     * avoided object churn, not codegen.) Measured on the 500 K-doc
-    * bench intake (`tools/StateStoreBench`): r7 band 6.9 s vs 9.3 s
+    * bench intake: r7 band 6.9 s vs 9.3 s
     * (34% faster); r9 band 9.65 s vs 10.31 s (7%) — in a slower-IO
     * band the shared per-(batch × partition) store-commit cost
     * dominates both paths and compresses the relative win (see the
@@ -149,8 +149,8 @@ object StatefulDedup {
   // distinct keys the 64-bit birthday bound (~2.7 expected collisions)
   // silently drops a distinct document as "seen"; dropDuplicates groups
   // on struct equality unchanged and each state row widens by 8 bytes.
-  // Every exact-gate caller in this repo (Bench, StateStoreBench,
-  // StreamGateProbe) keys on the struct.
+  // The exact gate's one main-tree caller (Bench's stream intake) keys
+  // on the struct.
   def firstSeenExact(df: DataFrame, keyCol: String): DataFrame =
     df.dropDuplicates(Seq(keyCol))
 
@@ -200,7 +200,7 @@ object StatefulDedup {
     * this session concurrently with the scope; for a multi-tenant
     * session, plan the stream on `spark.newSession()` (shared context,
     * isolated conf) and scope that session instead. Every caller in
-    * this repo (Bench gate, StreamGateProbe, TaskRunner.run) holds the
+    * this repo (Bench gate, TaskRunner.run) holds the
     * session single-threaded across the — brief, start()-bounded —
     * scope.
     *

@@ -21,15 +21,18 @@ final case class TaskConfig(
     maxDims: Int = Short.MaxValue,
     whiteList: Option[String] = None,
     blackList: Option[String] = None,
-    geoipHandle: Boolean = false,
     prometheusSchema: Boolean = false)
 
 object TaskConfig {
 
   /** Parse the reference's task-config JSON shape (the `task` object of
-    * docker/test_*.json). Unknown fields are ignored; defaults and
-    * validation follow the `normallizeTask` rules
-    * (config/config.go:236-301):
+    * docker/test_*.json). Unknown fields are ignored — including the
+    * reference's `geoipHandle`, since enrichment is the `enrich`
+    * argument of [[TaskRunner.run]], not a config switch, so configs
+    * that still set it keep parsing. Integer fields are clamped as
+    * 64-bit values before narrowing, so out-of-range input caps
+    * instead of wrapping. Defaults and validation follow the
+    * `normallizeTask` rules (config/config.go:236-301):
     *  - bufferSize ≤ 0 → 2^18; > 2^20 → 2^20; else rounded UP to the
     *    next power of two (`1 << GetShift(…)`, util/common.go:104-108);
     *  - flushInterval ≤ 0 → 5 s, capped at 600 s;
@@ -55,8 +58,8 @@ object TaskConfig {
       case JStr(s) => s
       case _ => dflt
     }
-    def int(o: JObj, k: String, dflt: Int): Int = o.get(k) match {
-      case n: JNum => n.int64.map(_.toInt).getOrElse(dflt)
+    def long(o: JObj, k: String, dflt: Long): Long = o.get(k) match {
+      case n: JNum => n.int64.getOrElse(dflt)
       case _ => dflt
     }
     def bool(o: JObj, k: String): Boolean = o.get(k) match {
@@ -106,12 +109,12 @@ object TaskConfig {
           s"white/black list '$re' is invalid regexp: ${e.getMessage}")
       }
     // ≤0 → default; >max → max; else round UP to a power of two
-    val rawBuf = int(task, "bufferSize", 1 << 18)
+    val rawBuf = long(task, "bufferSize", 1L << 18)
     val bufferSize =
       if (rawBuf <= 0) 1 << 18
       else if (rawBuf > (1 << 20)) 1 << 20
-      else 1 << graft.operators.Sharding.roundupShift(rawBuf)
-    val rawFlush = int(task, "flushInterval", 5)
+      else 1 << graft.operators.Sharding.roundupShift(rawBuf.toInt)
+    val rawFlush = long(task, "flushInterval", 5)
     TaskConfig(
       name = str(task, "name"),
       topic = str(task, "topic"),
@@ -126,12 +129,14 @@ object TaskConfig {
       shardingKey = optStr(task, "shardingKey"),
       shardingPolicy = str(task, "shardingPolicy"),
       bufferSize = bufferSize,
-      flushInterval = if (rawFlush <= 0) 5 else math.min(rawFlush, 600),
+      flushInterval = if (rawFlush <= 0) 5 else math.min(rawFlush, 600L).toInt,
       dynamicSchema = dynamic,
-      maxDims = { val m = int(dyn, "maxDims", 0); if (m <= 0) Short.MaxValue else m },
+      maxDims = {
+        val m = long(dyn, "maxDims", 0)
+        if (m <= 0) Short.MaxValue else math.min(m, Int.MaxValue.toLong).toInt
+      },
       whiteList = whiteList,
       blackList = blackList,
-      geoipHandle = bool(task, "geoipHandle"),
       prometheusSchema = prometheus)
   }
 }

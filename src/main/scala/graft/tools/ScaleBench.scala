@@ -341,7 +341,8 @@ object ScaleBench {
     // sends every hot-gram row to one partition, but each doc carries
     // a gram at most once, so the hot partition holds ~0.1·N rows of
     // a ~50·N-row join — the balance is measured, not predicted
-    // (ProfileSkew bind section; PLANS.md "Bind×skew decomposition").
+    // (r18: hottest/median partition rows 1.10 at sf0.1, 1.03 at sf1;
+    // PLANS.md "Bind×skew decomposition").
     "q120_jaccard_bind_skew", "q121_containment_bind_skew")
 
   def generate(spark: SparkSession, base: String): Unit = {
@@ -542,10 +543,10 @@ object ScaleBench {
       }
       // stage decomposition (r18 judge directive #5): rows registered
       // in graft.queries.StageProbes time their named prefix
-      // sub-pipelines at both scales, every sweep — the ProfileQ50
-      // treatment as a self-classifying artifact field. Each stage's
-      // own ratio brackets where the row's ratio lives (see
-      // StageProbes' reading note).
+      // sub-pipelines at both scales, every sweep — the r18 q50
+      // prefix decomposition as a self-classifying artifact field.
+      // Each stage's own ratio brackets where the row's ratio lives
+      // (see StageProbes' reading note).
       val stageDecomp = graft.queries.StageProbes.probes.get(n).map {
         stages =>
           stages.map { case (label, build) =>

@@ -52,6 +52,9 @@ class TaskConfigNormalizeSpec extends AnyFunSuite {
     assert(parse(""", "bufferSize": 0""").bufferSize === (1 << 18))
     assert(parse(""", "bufferSize": -5""").bufferSize === (1 << 18))
     assert(parse(""", "bufferSize": 9999999""").bufferSize === (1 << 20))
+    // beyond Int range: clamped as Long, never wrapped (2^32+1 → 1, 2^32 → 0)
+    assert(parse(""", "bufferSize": 4294967297""").bufferSize === (1 << 20))
+    assert(parse(""", "bufferSize": 4294967296""").bufferSize === (1 << 20))
   }
 
   test("flushInterval: ≤0 → 5, capped at 600 (config.go:253-256)") {
@@ -59,6 +62,7 @@ class TaskConfigNormalizeSpec extends AnyFunSuite {
     assert(parse(""", "flushInterval": 0""").flushInterval === 5)
     assert(parse(""", "flushInterval": 9000""").flushInterval === 600)
     assert(parse(""", "flushInterval": 30""").flushInterval === 30)
+    assert(parse(""", "flushInterval": 2147483648""").flushInterval === 600)
   }
 
   test("timeUnit 0 → 1.0 (config.go:271-273)") {

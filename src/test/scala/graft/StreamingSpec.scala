@@ -239,7 +239,9 @@ class JdbcExactlyOnceSinkSpec extends SparkSuite {
 /** End-to-end streaming smoke mirroring go.test.sh:51-58: N JSON messages
   * through source → typed projection → checkpointed foreachBatch sink;
   * count == N; restart from checkpoint does not re-deliver. */
-class StreamingSmokeSpec extends SparkSuite {
+class StreamingSmokeSpec extends SparkSuite
+    with org.scalatest.concurrent.Eventually {
+  import org.scalatest.time.{Millis, Seconds, Span}
 
   test("file stream → parse → parquet sink, count == N, no redelivery on restart") {
     import spark.implicits._
@@ -264,13 +266,20 @@ class StreamingSmokeSpec extends SparkSuite {
     }
 
     writeBatch(0, 100, "batch1.jsonl")
+    // one malformed line (index 100): consumed and counted, never sunk
+    Files.write(Paths.get(srcDir, "bad.jsonl"),
+      """{"time": "2022-01-29 08:20:00", "name": "name100", "value": """
+        .getBytes("UTF-8"))
+    // each line's name index doubles as its Kafka offset, so offsets
+    // increase across the two runs (0..100, then 101..150)
+    def stream() = spark.readStream.format("text").load(srcDir)
+      .select(col("value"),
+        lit("t").as("topic"), lit(0).as("partition"),
+        regexp_extract(col("value"), "name(\\d+)", 1).cast("long").as("offset"))
     val metrics = new StreamMetrics
     spark.streams.addListener(metrics)
     try {
-      val source = spark.readStream.format("text").load(srcDir)
-        .select(col("value"),
-          lit("t").as("topic"), lit(0).as("partition"),
-          lit(0L).as("offset"))
+      val source = stream()
       val q1 = TaskRunner.run(cfg, source, new ParquetSink(outDir), ckDir,
         availableNow = true)
       q1.awaitTermination(60000)
@@ -280,18 +289,20 @@ class StreamingSmokeSpec extends SparkSuite {
       assert(got1.filter(col("name") === "name7").select("value").head().getDouble(0) === 7.0)
 
       // restart with more input: only the new rows land
-      writeBatch(100, 50, "batch2.jsonl")
-      val source2 = spark.readStream.format("text").load(srcDir)
-        .select(col("value"),
-          lit("t").as("topic"), lit(0).as("partition"),
-          lit(0L).as("offset"))
+      writeBatch(101, 50, "batch2.jsonl")
+      val source2 = stream()
       val q2 = TaskRunner.run(cfg, source2, new ParquetSink(outDir), ckDir,
         availableNow = true)
       q2.awaitTermination(60000)
       assert(spark.read.parquet(outDir).count() === 150)
-      // observed metrics flowed (ConsumeMsgsTotal counted, no parse errors)
       spark.streams.active.foreach(_.stop())
-      assert(metrics.totals.getOrDefault("ParseMsgsErrorTotal", 0L) === 0L)
+      // observed metrics arrive on the asynchronous listener bus: counters
+      // sum over both runs, the ConsumeOffsets gauge keeps its max
+      eventually(timeout(Span(30, Seconds)), interval(Span(100, Millis))) {
+        assert(metrics.totals.get("ConsumeMsgsTotal") === 151L)
+        assert(metrics.totals.get("ParseMsgsErrorTotal") === 1L)
+        assert(metrics.totals.get("ConsumeOffsets") === 150L)
+      }
     } finally spark.streams.removeListener(metrics)
   }
 
