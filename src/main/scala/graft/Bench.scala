@@ -197,7 +197,7 @@ object Bench {
     // synthesis is the broker's job, not the sinker's — and the clock
     // covers scan → typed parse (JsonTypedRow) → __kafka_* virtuals →
     // SearchIP(src,dst) over a 131k-range broadcast geo table →
-    // ReplaceUnknown serviceMap joins → shard routing → sink.
+    // ReplaceUnknown serviceMap lookup → shard routing → sink.
     val INGEST_ROWS = 2000000L
     def ingestPipeline(input: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       import graft.schema.ColumnSpec

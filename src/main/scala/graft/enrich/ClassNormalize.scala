@@ -21,8 +21,12 @@ import org.apache.spark.sql.functions._
   *  - otherwise a `"a/b"` class with distinct halves keeps the second
   *    half; equal halves are left whole.
   *
-  * Scale shape: two broadcast hash joins against the ~11.5k-row dim table
-  * — zero fact-side shuffle at any scale.
+  * Scale shape: the ~11.5k-entry map is broadcast once per
+  * [[replaceUnknown]] call (once per streaming query, not per
+  * micro-batch) and probed by a UDF that runs only on `Unknown/Unknown`
+  * rows — no join to plan per batch, zero fact-side shuffle at any
+  * scale. The resource's 11,485 keys are unique, so a key names one
+  * service.
   */
 object ClassNormalize {
 
@@ -45,32 +49,22 @@ object ClassNormalize {
   }
 
   /** Adds/replaces `class` on a frame having (class, ip_proto, port_src,
-    * port_dst). */
+    * port_dst). A null proto or port makes a null key, which misses. */
   def replaceUnknown(spark: SparkSession)(df: DataFrame): DataFrame = {
-    val dim = serviceMap(spark)
-    val srcDim = broadcast(dim
-      .withColumnRenamed("key", "__svc_key_src")
-      .withColumnRenamed("service", "__svc_src"))
-    val dstDim = broadcast(dim
-      .withColumnRenamed("key", "__svc_key_dst")
-      .withColumnRenamed("service", "__svc_dst"))
-    val keyed = df
-      .withColumn("__key_src",
-        concat(col("ip_proto"), lit(":"), col("port_src").cast("string")))
-      .withColumn("__key_dst",
-        concat(col("ip_proto"), lit(":"), col("port_dst").cast("string")))
-    val joined = keyed
-      .join(srcDim, col("__key_src") === col("__svc_key_src"), "left")
-      .join(dstDim, col("__key_dst") === col("__svc_key_dst"), "left")
+    val services = spark.sparkContext.broadcast(serviceRows.toMap)
+    val service = udf { (dstKey: String, srcKey: String) =>
+      val m = services.value
+      def hit(key: String) = if (key == null) None else m.get(key)
+      hit(dstKey).orElse(hit(srcKey)).getOrElse("Unknown")
+    }
+    def key(port: String) =
+      concat(col("ip_proto"), lit(":"), col(port).cast("string"))
     val halves = split(col("class"), "/")
     val normalized = when(col("class") === "Unknown/Unknown",
-        coalesce(col("__svc_dst"), col("__svc_src"), lit("Unknown")))
+        service(key("port_dst"), key("port_src")))
       .when(col("class").contains("/") && halves.getItem(0) =!= halves.getItem(1),
         halves.getItem(1))
       .otherwise(col("class"))
-    joined
-      .withColumn("class", normalized)
-      .drop("__key_src", "__key_dst", "__svc_key_src", "__svc_key_dst",
-        "__svc_src", "__svc_dst")
+    df.withColumn("class", normalized)
   }
 }

@@ -1,6 +1,7 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -50,42 +51,23 @@ case class Ipv4ToLong(child: Expression) extends UnaryExpression with CodegenFal
     copy(child = newChild)
 }
 
-/** The `SearchIP` lookup core (input/kafka_sarama.go:11570-11640 over the
-  * qqwry binary search, qqwry.go:117-149): O(log n) probe into a sorted
-  * broadcast range array, then the reference's textual post-processing
-  * re-expressed structurally:
-  *
-  *  - miss (no range, or invalid IP) → loc = isp = 未知;
-  *  - hit → the qqwry "country area" text is whitespace-tokenized: loc is
-  *    the first token; isp joins the remaining tokens with "" (foreign
-  *    names/ISPs may contain spaces), or 未知 when the area is empty;
-  *  - LAN entries (text contains 同一内部网) normalize to loc = isp =
-  *    局域网 (kafka_sarama.go:11616-11620).
-  *
-  * The range array rides the serialized expression — one copy per
-  * executor via the task-binary broadcast, matching the reference's
-  * process-wide in-memory DB. A 100k-range table is ~3 MB: well under
-  * broadcast limits, and the probe stays O(log n) per row vs the O(n)
-  * per-row scans a BroadcastNestedLoopJoin over a BETWEEN predicate
-  * would do.
+/** The geo database as the per-row probe reads it: ranges sorted by
+  * `start`, each range's loc/isp (already split by
+  * [[IpRangeLookup.splitLocIsp]]) as ids into one pool of distinct
+  * strings. Real tables repeat a few thousand locations and ISPs over
+  * 10^5+ ranges, so the pool is small and the table is four primitive
+  * arrays. Built once and shipped once per query as a `Broadcast`
+  * ([[GeoTable.broadcast]]).
   */
-case class IpRangeLookup(
-    child: Expression,
+final class GeoTable private (
     starts: Array[Long],
     ends: Array[Long],
-    locs: Array[UTF8String],
-    isps: Array[UTF8String]) extends UnaryExpression with CodegenFallback {
+    locIds: Array[Int],
+    ispIds: Array[Int],
+    pool: Array[UTF8String]) extends Serializable {
 
-  override def dataType: DataType = IpRangeLookup.outputType
-  override def nullable: Boolean = false
-
-  private val unknown = UTF8String.fromString("未知")
-
-  /** Invalid/missing IP behaves like a lookup miss, not a null row. */
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return InternalRow(unknown, unknown)
-    val ip = v.asInstanceOf[Long]
+  /** (loc, isp) of the range holding `ip`, or null on a miss. */
+  def lookup(ip: Long): InternalRow = {
     // rightmost start <= ip (searchIndex, qqwry.go:117-149)
     var lo = 0
     var hi = starts.length - 1
@@ -95,8 +77,69 @@ case class IpRangeLookup(
       if (starts(mid) <= ip) { idx = mid; lo = mid + 1 }
       else hi = mid - 1
     }
-    if (idx < 0 || ip > ends(idx)) InternalRow(unknown, unknown)
-    else InternalRow(locs(idx), isps(idx))
+    if (idx < 0 || ip > ends(idx)) null
+    else InternalRow(pool(locIds(idx)), pool(ispIds(idx)))
+  }
+}
+
+object GeoTable {
+
+  /** Pre-split the SearchIP string semantics at build time (once per
+    * table) so the per-row probe only copies two pooled UTF8Strings. */
+  def apply(ranges: Seq[IpRange]): GeoTable = {
+    val sorted = ranges.sortBy(_.start).toArray
+    // insertion-ordered, so a string's id is its index in the pool
+    val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    def idOf(s: String): Int = ids.getOrElseUpdate(s, ids.size)
+    val (locIds, ispIds) = sorted.map { r =>
+      val (loc, isp) = IpRangeLookup.splitLocIsp(r.country, r.area)
+      (idOf(loc), idOf(isp))
+    }.unzip
+    val pool = ids.keysIterator.map(UTF8String.fromString).toArray
+    new GeoTable(sorted.map(_.start), sorted.map(_.end), locIds, ispIds, pool)
+  }
+
+  /** Build once and broadcast: each executor fetches the table once per
+    * query, and the expressions that probe it carry only the handle. */
+  def broadcast(spark: SparkSession, ranges: Seq[IpRange]): Broadcast[GeoTable] =
+    spark.sparkContext.broadcast(GeoTable(ranges))
+}
+
+/** The `SearchIP` lookup core (input/kafka_sarama.go:11570-11640 over the
+  * qqwry binary search, qqwry.go:117-149): O(log n) probe into the sorted
+  * broadcast [[GeoTable]], then the reference's textual post-processing
+  * re-expressed structurally:
+  *
+  *  - miss (no range, or invalid IP) → loc = isp = 未知;
+  *  - hit → the qqwry "country area" text is whitespace-tokenized: loc is
+  *    the first token; isp joins the remaining tokens with "" (foreign
+  *    names/ISPs may contain spaces), or 未知 when the area is empty;
+  *  - LAN entries (text contains 同一内部网) normalize to loc = isp =
+  *    局域网 (kafka_sarama.go:11616-11620).
+  *
+  * The expression holds only the `Broadcast` handle, so the task binary
+  * stays small; the table crosses the wire once per executor per query,
+  * matching the reference's process-wide in-memory DB. Embedding the
+  * arrays in the expression instead put one copy per looked-up column
+  * into every task binary (14.5 MiB per stage for a 2^17-range table,
+  * deserialized once per task). The probe stays O(log n) per row vs the
+  * O(n) per-row scans a BroadcastNestedLoopJoin over a BETWEEN predicate
+  * would do.
+  */
+case class IpRangeLookup(child: Expression, table: Broadcast[GeoTable])
+    extends UnaryExpression with CodegenFallback {
+
+  override def dataType: DataType = IpRangeLookup.outputType
+  override def nullable: Boolean = false
+
+  @transient private lazy val geo = table.value
+  private val unknown = UTF8String.fromString("未知")
+
+  /** Invalid/missing IP behaves like a lookup miss, not a null row. */
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input)
+    val hit = if (v == null) null else geo.lookup(v.asInstanceOf[Long])
+    if (hit == null) InternalRow(unknown, unknown) else hit
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -107,24 +150,6 @@ object IpRangeLookup {
   val outputType: StructType = StructType(Seq(
     StructField("loc", StringType, nullable = false),
     StructField("isp", StringType, nullable = false)))
-
-  /** Pre-split the SearchIP string semantics at build time (driver side,
-    * once) so the per-row probe only copies two pooled UTF8Strings. */
-  def build(child: Expression, ranges: Seq[IpRange]): IpRangeLookup = {
-    val sorted = ranges.sortBy(_.start)
-    val locs = new Array[UTF8String](sorted.length)
-    val isps = new Array[UTF8String](sorted.length)
-    var i = 0
-    while (i < sorted.length) {
-      val r = sorted(i)
-      val (loc, isp) = splitLocIsp(r.country, r.area)
-      locs(i) = UTF8String.fromString(loc)
-      isps(i) = UTF8String.fromString(isp)
-      i += 1
-    }
-    IpRangeLookup(child, sorted.map(_.start).toArray, sorted.map(_.end).toArray,
-      locs, isps)
-  }
 
   /** kafka_sarama.go:11580-11620 textual parse, structural form. */
   def splitLocIsp(country: String, area: String): (String, String) = {
@@ -137,14 +162,11 @@ object IpRangeLookup {
   }
 }
 
-/** DataFrame-level enrichment stages (the E1 `HandleMsg` composition as
-  * structured column ops instead of JSON string rewriting).
-  */
 /** The E1 `HandleMsg` composition (input/kafka_sarama.go:11670-11674):
   * `SearchIP` then `ReplaceUnknown`, as one structured pipeline stage for
   * TaskRunner's `enrich` hook. */
 object Enrich {
-  def handleMsg(spark: org.apache.spark.sql.SparkSession, ranges: Seq[IpRange])
+  def handleMsg(spark: SparkSession, ranges: Seq[IpRange])
       (df: DataFrame): DataFrame =
     ClassNormalize.replaceUnknown(spark)(IpEnrich.searchIp(df, ranges))
 }
@@ -155,17 +177,20 @@ object IpEnrich {
   def ipv4ToLong(ip: Column): Column =
     ColumnBridge.col(Ipv4ToLong(ColumnBridge.expr(ip)))
 
-  /** `SearchIP` for one object (src/dst): adds `loc_<obj>`/`isp_<obj>`
-    * from `ip_<obj>`. One binsearch per row per object; the struct is
+  /** `SearchIP` for each object (src/dst): adds `loc_<obj>`/`isp_<obj>`
+    * from `ip_<obj>`. The table is broadcast once and shared by every
+    * object's lookup. One binsearch per row per object; the struct is
     * materialized once and field-projected. */
   def searchIp(df: DataFrame, ranges: Seq[IpRange],
-      objs: Seq[String] = Seq("src", "dst")): DataFrame =
+      objs: Seq[String] = Seq("src", "dst")): DataFrame = {
+    val table = GeoTable.broadcast(df.sparkSession, ranges)
     objs.foldLeft(df) { (d, obj) =>
-      val looked = ColumnBridge.col(IpRangeLookup.build(
-        Ipv4ToLong(ColumnBridge.expr(d.col(s"ip_$obj"))), ranges))
+      val looked = ColumnBridge.col(IpRangeLookup(
+        Ipv4ToLong(ColumnBridge.expr(d.col(s"ip_$obj"))), table))
       d.withColumn(s"__lk_$obj", looked)
         .withColumn(s"loc_$obj", fcol(s"__lk_$obj.loc"))
         .withColumn(s"isp_$obj", fcol(s"__lk_$obj.isp"))
         .drop(s"__lk_$obj")
     }
+  }
 }

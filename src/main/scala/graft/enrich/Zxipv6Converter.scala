@@ -4,13 +4,10 @@ import java.nio.charset.Charset
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
-
-import graft.functions.ColumnBridge
 
 /** Offline converter for the zxipv6wry IPv6 geo database
   * (ipHandle/pkg/zxipv6wry/zxipv6wry.go:59-133): 11-byte index rows keyed
@@ -117,12 +114,4 @@ case class Ipv6ToLongHi(child: Expression) extends UnaryExpression with CodegenF
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object Ipv6Enrich {
-  /** `SearchIP` over IPv6 columns: same broadcast-binsearch lookup, keyed
-    * on mapped top-64-bit prefixes. */
-  def lookup(ranges: Seq[IpRange])(ip: Column): Column =
-    ColumnBridge.col(IpRangeLookup.build(
-      Ipv6ToLongHi(ColumnBridge.expr(ip)), ranges))
 }

@@ -51,8 +51,9 @@ object Enrichment {
       .select("event_id", "ip_src", "loc_src", "isp_src")
   }
 
-  /** q16: service-class normalization — two broadcast hash joins against
-    * the bundled ~11.5k-entry proto:port dim + the `/`-split rules. */
+  /** q16: service-class normalization — one lookup into the bundled
+    * ~11.5k-entry proto:port map, broadcast once per query, on
+    * `Unknown/Unknown` rows + the `/`-split rules. */
   def q16ClassNormalize(s: SparkSession, dir: String): DataFrame = {
     val events = Tables.parallel(s, dir, "events")
     val flows = events.select(

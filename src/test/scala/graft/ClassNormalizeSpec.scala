@@ -18,7 +18,7 @@ class ClassNormalizeSpec extends SparkSuite {
 
   test("replaceUnknown rules") {
     import spark.implicits._
-    val in = Seq(
+    val in = Seq[(Int, String, String, java.lang.Long, java.lang.Long)](
       // Unknown/Unknown + dst hit → dst service
       (1, "Unknown/Unknown", "tcp", 50000L, 443L),
       // Unknown/Unknown + src hit only → src service
@@ -32,10 +32,17 @@ class ClassNormalizeSpec extends SparkSuite {
       // equal halves → unchanged whole
       (6, "HTTP/HTTP", "tcp", 1L, 2L),
       // no slash → unchanged
-      (7, "plain", "tcp", 1L, 2L))
+      (7, "plain", "tcp", 1L, 2L),
+      // a null key misses: null src port, dst hit → dst service
+      (8, "Unknown/Unknown", "tcp", null, 443L),
+      // null proto → both keys null → Unknown
+      (9, "Unknown/Unknown", null, 80L, 443L),
+      // null class stays null
+      (10, null, "tcp", 80L, 443L))
       .toDF("id", "class", "ip_proto", "port_src", "port_dst")
     val out = in.transform(ClassNormalize.replaceUnknown(spark))
       .orderBy("id").select("class").collect().map(_.getString(0)).toSeq
-    assert(out === Seq("https", "http", "dns", "Unknown", "TLS", "HTTP/HTTP", "plain"))
+    assert(out === Seq("https", "http", "dns", "Unknown", "TLS", "HTTP/HTTP", "plain",
+      "https", "Unknown", null))
   }
 }

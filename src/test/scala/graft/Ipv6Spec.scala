@@ -2,18 +2,16 @@ package graft
 
 import java.io.ByteArrayOutputStream
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.enrich.{Ipv6ToLongHi, IpRange, IpRangeLookup, Zxipv6Converter}
+import graft.enrich.{GeoTable, Ipv6ToLongHi, IpRangeLookup, Zxipv6Converter}
 
 /** IPv6 geo DB: top-64-bit keying, unsigned-order mapping, binary format
   * (ipHandle/pkg/zxipv6wry/zxipv6wry.go:59-133). */
-class Ipv6Spec extends AnyFunSuite {
+class Ipv6Spec extends SparkSuite {
 
   private def hi(ip: String): Any =
     Ipv6ToLongHi(Literal(UTF8String.fromString(ip), StringType))
@@ -74,9 +72,10 @@ class Ipv6Spec extends AnyFunSuite {
     assert(ranges.head.area === "联通") // CZ88 scrubbed
     assert(ranges(1).country === "美国")
 
+    val table = GeoTable.broadcast(spark, ranges)
     def lookup(ip: String): (String, String) = {
-      val e = IpRangeLookup.build(
-        Ipv6ToLongHi(Literal(UTF8String.fromString(ip), StringType)), ranges)
+      val e = IpRangeLookup(
+        Ipv6ToLongHi(Literal(UTF8String.fromString(ip), StringType)), table)
       val r = e.eval(InternalRow.empty).asInstanceOf[InternalRow]
       (r.getUTF8String(0).toString, r.getUTF8String(1).toString)
     }
