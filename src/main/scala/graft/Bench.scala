@@ -417,13 +417,11 @@ object Bench {
       // config fix, now in code)
       val rowsPerTrigger = STREAM_ROWS * 2 / 16
       val t0 = System.nanoTime()
-      // the TTL-0 exact gate rides the NATIVE streaming dedup operator
-      // (same state store, no object shuffle) — see firstSeenExact's doc;
-      // the TTL/observability variant firstSeen measured 9.3 s vs this
-      // path's 6.9 s on the r7 450 K-key intake
+      // the exact gate is Spark's native streaming dedup operator
+      // (StatefulDedup.firstSeen)
       graft.streaming.StatefulDedup.withStatePartitions(
           spark, graft.streaming.StatefulDedup.statePartitionsFor(rowsPerTrigger)) {
-        (if (gate) graft.streaming.StatefulDedup.firstSeenExact(admitted, "fp")
+        (if (gate) graft.streaming.StatefulDedup.firstSeen(admitted, "fp")
          else admitted)
           .writeStream.format("parquet")
           .option("path", out).option("checkpointLocation", ck)

@@ -16,15 +16,6 @@ import java.nio.file.{Files, Paths}
   */
 object GeoDb {
 
-  type Converter = Array[Byte] => Seq[IpRange]
-
-  /** Registered format converters, probed in order. */
-  val converters: Seq[(String, Converter)] = Seq(
-    "mmdb" -> (d => MmdbConverter.readAll(d)),
-    "ipdb" -> (d => IpdbConverter.readAll(d)),
-    "qqwry" -> QqwryConverter.readAll,
-    "zxipv6wry" -> Zxipv6Converter.readAll)
-
   /** IPv4 table: mmdb / ipdb by content, else qqwry (the reference's
     * zh-CN default, db.go:56-61). */
   def convertV4(data: Array[Byte], lang: String): Seq[IpRange] =

@@ -28,30 +28,22 @@ import graft.functions.ColumnBridge
   * hits an OOM wall when state outgrows it. At 100 TB-scale key domains
   * set `spark.sql.streaming.stateStore.providerClass` to
   * `RocksDBStateStoreProvider` (+ changelog checkpointing): state moves
-  * off-heap and spills to local disk, so state size is unbounded — and on
-  * this workload it isn't even a throughput trade (r7 measurement on the
-  * 450 K-key bench intake, 8 micro-batches: 9.3 s HDFS vs 8.3 s
-  * RocksDB vs 6.9 s for the native-operator path below; RocksDB's
-  * maintenance work overlaps the heap store's snapshot cost). Both
-  * providers pass this operator's restart spec.
+  * off-heap and spills to local disk, so state size is unbounded. Both
+  * providers pass [[firstSeen]]'s restart spec.
   */
 object StatefulDedup {
 
-  /** Versioned state value. The schema bump from the pre-r8 bare Boolean
-    * is DELIBERATE: Spark's state-schema compatibility check
+  /** [[nearDupGate]]'s state value: one versioned marker per band key.
+    * Spark's state-schema compatibility check
     * (`spark.sql.streaming.stateStore.stateSchemaCheck`, on by default)
-    * compares this value schema against the checkpoint's, so a stream
-    * restarted from a checkpoint written by the old Boolean-state /
-    * unprefixed-key build now FAILS LOUDLY at start instead of silently
-    * treating every previously-seen key as unseen and re-admitting one
-    * duplicate per key (the r6 key-encoding change made old checkpoints
-    * semantically stale; this makes them *visibly* stale). The `ver`
-    * field also guards the next semantic change that doesn't alter the
-    * schema: a mismatched version raises immediately rather than
-    * half-applying old state. */
+    * compares this value schema against the checkpoint's, so a
+    * checkpoint written with a different state layout fails at query
+    * start instead of being half-applied. The `ver` field guards the next
+    * semantic change that keeps the schema: a mismatched version raises
+    * on the first batch that reads the old state. */
   final case class SeenState(ver: Int)
 
-  /** Bump on any change to state semantics or the group-key encoding. */
+  /** Bump on any change to the gate's state semantics or band-key encoding. */
   val StateVersion = 2
 
   private def checkVer(s: SeenState): Unit =
@@ -61,97 +53,38 @@ object StatefulDedup {
           "checkpoint was written by an incompatible build; drain and " +
           "restart with a fresh checkpoint")
 
-  /** Emit only the first row ever seen per value of `keyCol` (across all
-    * micro-batches). State: one versioned marker per key, partitioned by
-    * key.
+  /** Emit only the first row ever seen per value of `keyCol`, across all
+    * micro-batches and restarts, on Spark's native streaming dedup
+    * operator (`dropDuplicates` → `StreamingDeduplicateExec`): one state
+    * row per key in the key-partitioned state store, probed on `UnsafeRow`s
+    * with no object encoder or per-group closure. State grows with the
+    * distinct-key count, as the reference's bitmap does; nothing is
+    * evicted. A null key is one key of its own, distinct from the string
+    * `"null"`. On a batch frame this is plain per-frame dedup.
     *
-    * `stateTtlMs > 0` bounds state growth for unbounded key domains: a key
-    * idle longer than the TTL is forgotten (and would be re-emitted if it
-    * reappears) — the same memory/exactness dial as the reference's
-    * seriesQuota eviction. 0 = keep forever (exact; state grows with the
-    * distinct-key count, which is what the reference's bitmap does too).
-    */
-  def firstSeen(df: DataFrame, keyCol: String, stateTtlMs: Long = 0L): DataFrame = {
-    implicit val rowEnc: Encoder[Row] = Encoders.row(df.schema)
-    implicit val stEnc: Encoder[SeenState] = Encoders.product[SeenState]
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val timeout =
-      if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    // null keys get a non-printable sentinel prefix so they can never
-    // collide with a row whose key is the literal string "null"
-    // (String.valueOf(null) == "null"); real keys are prefixed too so
-    // the two domains stay disjoint.
-    // STATE-COMPAT: this "k"+v / "\u0000null" encoding (introduced after
-    // the unprefixed String.valueOf encoding) changes every state-store
-    // group key. Restarting from a checkpoint written by the old build
-    // would silently re-admit one duplicate per key — which is why the
-    // state VALUE schema was bumped alongside ([[SeenState]]): the
-    // old-Boolean checkpoint now fails Spark's state-schema check at
-    // query start, instead of half-applying stale state. Upgrading a
-    // long-lived stream means drain + restart with a fresh checkpoint.
-    // (The old encoding also merged null-keyed rows with literal-"null"
-    // keys; this one keeps the domains disjoint.)
-    df.groupByKey { r =>
-      val v = r.get(keyIdx)
-      if (v == null) "\u0000null" else "k" + v
-    }(Encoders.STRING)
-      .flatMapGroupsWithState[SeenState, Row](
-        OutputMode.Append(), timeout) {
-        (_: String, rows: Iterator[Row], state: GroupState[SeenState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (state.exists) {
-            checkVer(state.get)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            Iterator.empty
-          } else {
-            state.update(SeenState(StateVersion))
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
-            rows.take(1)
-          }
-      }
-  }
-
-  /** The TTL-0 exact case of [[firstSeen]] on Spark's NATIVE streaming
-    * dedup operator (`dropDuplicates` → `StreamingDeduplicateExec`):
-    * identical first-seen-admit semantics and the same key-partitioned
-    * state store, but the per-row path works on UnsafeRow directly — no
-    * `groupByKey` object shuffle, no Row-encoder round trip, no Scala
-    * closure per group. (`StreamingDeduplicateExec` itself is outside
-    * whole-stage codegen, as all stateful operators are; the win is the
-    * avoided object churn, not codegen.) Measured on the 500 K-doc
-    * bench intake: r7 band 6.9 s vs 9.3 s
-    * (34% faster); r9 band 9.65 s vs 10.31 s (7%) — in a slower-IO
-    * band the shared per-(batch × partition) store-commit cost
-    * dominates both paths and compresses the relative win (see the
-    * sizing note below). Use [[firstSeen]]
-    * when you need the TTL dial or duplicate-count observability from
-    * the state callback; use this when you need throughput on the
-    * forever-exact gate. In-batch ties: `dropDuplicates` keeps an
-    * arbitrary row of a key's first batch (vs [[firstSeen]]'s
-    * iterator-order first) — both admit exactly one.
+    * In-batch ties: exactly one row per new key is admitted, the first in
+    * the state partition's row order — the first occurrence when a key's
+    * rows come from one input split.
     *
-    * SIZING the state partitioning (r9 measurement): the state store
-    * pays a FIXED per-(micro-batch × partition) commit cost (open +
-    * delta write + fsync, ~15–25 ms each on this host's
-    * HDFSBackedStateStoreProvider; RocksDB is worse for tiny states).
-    * Partition count is pinned by `spark.sql.shuffle.partitions` at the
-    * checkpoint's FIRST batch — size it to rows-per-trigger, not
-    * cluster width: the 500 K-row bench gate spends 9.2 s at 32
-    * partitions (8 triggers × 32 = 256 commit cycles ≈ 5.6 s of pure
-    * commit overhead) vs 4.8 s at 8, while the same 32 partitions are
-    * right when triggers carry tens of millions of rows. */
+    * State partitions are pinned by `spark.sql.shuffle.partitions` at the
+    * checkpoint's first batch; size them to trigger volume with
+    * [[withStatePartitions]] and [[statePartitionsFor]].
+    *
+    * CHECKPOINT COMPAT: a checkpoint written by the earlier
+    * `flatMapGroupsWithState` form of this gate (string group key,
+    * [[SeenState]] marker) is refused at query start with
+    * `STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA`, before any
+    * row is admitted. Upgrading a long-lived stream means drain, then
+    * restart with a fresh checkpoint (pinned by StatefulDedupSpec). */
   // KEY WIDTH (r16 judge directive #1): when keyCol is a derived
   // fingerprint standing in for content equality, use the 128-bit
   // Hashes.fingerprint128 struct, not a single xxhash64 — at 10^10
   // distinct keys the 64-bit birthday bound (~2.7 expected collisions)
   // silently drops a distinct document as "seen"; dropDuplicates groups
   // on struct equality unchanged and each state row widens by 8 bytes.
-  // The exact gate's one main-tree caller (Bench's stream intake) keys
-  // on the struct.
-  def firstSeenExact(df: DataFrame, keyCol: String): DataFrame =
+  // Bench's stream intake keys on the struct; TaskRunner keys on the
+  // task's own dedup column.
+  def firstSeen(df: DataFrame, keyCol: String): DataFrame =
     df.dropDuplicates(Seq(keyCol))
 
   /** Rows a single state partition should carry per trigger before it is
@@ -212,7 +145,7 @@ object StatefulDedup {
     * count wins, state stays consistent, and this scope's value only
     * takes effect for checkpoints created inside it. Re-sizing a
     * long-lived stream therefore means drain + fresh checkpoint, same
-    * as any state-layout change ([[SeenState]] doc). The restart path
+    * as any state-layout change ([[firstSeen]] doc). The restart path
     * is pinned by StatefulDedupSpec ("sized gate restarts under a
     * different session sizing"). */
   def withStatePartitions[T](
@@ -225,7 +158,7 @@ object StatefulDedup {
   }
 
   /** Online APPROXIMATE near-dup gate (flag-on variant of the exact
-    * first-seen gate above; the batch MinHash-LSH job
+    * first-seen gate [[firstSeen]]; the batch MinHash-LSH job
     * [[graft.operators.MinHashLsh]] stays the exact offline path): a doc
     * is suppressed when ANY of its minhash band keys has been seen in an
     * earlier micro-batch — standard LSH banding, so a ≥0.8-Jaccard

@@ -124,10 +124,8 @@ object TaskRunner {
     * `spark.sql.shuffle.partitions`, closing the default-sizing trap
     * the r9 decomposition diagnosed (a 62 K-row trigger on 32 session
     * partitions spends more time on store-commit cycles than on rows).
-    * Override with `statePartitions` when trigger volume is not
-    * bufferSize-bound (e.g. rate-limited sources). The sizing is pinned
-    * into the checkpoint at first batch and wins on restart
-    * ([[StatefulDedup.withStatePartitions]] CHECKPOINT COMPAT).
+    * The sizing is pinned into the checkpoint at first batch and wins on
+    * restart ([[StatefulDedup.withStatePartitions]] CHECKPOINT COMPAT).
     *
     * The conf scope is restored as soon as `start()` returns: Spark
     * clones the session (including `spark.sql.shuffle.partitions`)
@@ -143,12 +141,9 @@ object TaskRunner {
       enrich: DataFrame => DataFrame = identity,
       numShards: Int = 1,
       availableNow: Boolean = false,
-      dedupKey: Option[String] = None,
-      dedupTtlMs: Long = 0L,
-      statePartitions: Option[Int] = None): StreamingQuery = {
+      dedupKey: Option[String] = None): StreamingQuery = {
     val core = build(cfg, enrich, numShards = 1)(source)
-    val gated = dedupKey.fold(core)(k =>
-      StatefulDedup.firstSeen(core, k, dedupTtlMs))
+    val gated = dedupKey.fold(core)(StatefulDedup.firstSeen(core, _))
     val transformed = applyShard(cfg, numShards)(gated)
     def start(): StreamingQuery = transformed.writeStream
       .queryName(cfg.name)
@@ -161,10 +156,8 @@ object TaskRunner {
       }
       .start()
     if (dedupKey.isEmpty) start()
-    else StatefulDedup.withStatePartitions(
-      source.sparkSession,
-      statePartitions.getOrElse(
-        StatefulDedup.statePartitionsFor(cfg.bufferSize.toLong)))(start())
+    else StatefulDedup.withStatePartitions(source.sparkSession,
+      StatefulDedup.statePartitionsFor(cfg.bufferSize.toLong))(start())
   }
 }
 

@@ -39,6 +39,7 @@ class StatefulDedupSpec extends SparkSuite {
     // batch 1: duplicate keys inside one batch
     write("b1.csv", Seq("a,1", "b,2", "a,3"))
     runOnce()
+    assert(spark.read.parquet(outDir).count() === 2) // one row per key
     val got1 = spark.read.parquet(outDir).collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
     assert(got1.keySet === Set("a", "b"))
@@ -47,39 +48,11 @@ class StatefulDedupSpec extends SparkSuite {
     // batch 2 after restart: old keys suppressed by checkpointed state
     write("b2.csv", Seq("a,9", "c,4"))
     runOnce()
-    val got2 = spark.read.parquet(outDir).collect()
-      .map(r => (r.getString(0), r.getString(1))).toMap
-    assert(got2 === Map("a" -> "1", "b" -> "2", "c" -> "4"))
-  }
-
-  test("firstSeenExact (native dedup op) suppresses across batches and restarts") {
-    val dir = Files.createTempDirectory("dedupx").toString
-    val srcDir = s"$dir/in"; val outDir = s"$dir/out"; val ckDir = s"$dir/ck"
-    Files.createDirectories(Paths.get(srcDir))
-    def write(file: String, lines: Seq[String]): Unit =
-      Files.write(Paths.get(srcDir, file), lines.mkString("\n").getBytes("UTF-8"))
-    def runOnce(): Unit = {
-      val src = spark.readStream.format("text").load(srcDir)
-        .select(split(col("value"), ",").getItem(0).as("k"),
-          split(col("value"), ",").getItem(1).as("v"))
-      StatefulDedup.firstSeenExact(src, "k")
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckDir)
-        .trigger(Trigger.AvailableNow())
-        .start().awaitTermination(60000)
-    }
-    write("b1.csv", Seq("a,1", "b,2", "a,3"))
-    runOnce()
-    assert(spark.read.parquet(outDir).select("k").distinct().count() === 2)
-    assert(spark.read.parquet(outDir).count() === 2) // one row per key
-    // restart: checkpointed native-dedup state suppresses old keys
-    write("b2.csv", Seq("a,9", "c,4"))
-    runOnce()
-    val got = spark.read.parquet(outDir).collect()
+    val rows2 = spark.read.parquet(outDir).collect()
       .map(r => (r.getString(0), r.getString(1)))
-    assert(got.length === 3)
-    assert(got.count(_._1 == "a") === 1, "duplicate 'a' re-admitted after restart")
-    assert(got.toMap.apply("c") === "4")
+    assert(rows2.length === 3)
+    assert(rows2.count(_._1 == "a") === 1, "duplicate 'a' re-admitted after restart")
+    assert(rows2.toMap === Map("a" -> "1", "b" -> "2", "c" -> "4"))
   }
 
   test("firstSeen passes across restarts on the RocksDB state store too") {
@@ -143,7 +116,7 @@ class StatefulDedupSpec extends SparkSuite {
         val src = spark.readStream.format("text").load(srcDir)
           .select(split(col("value"), ",").getItem(0).as("k"),
             split(col("value"), ",").getItem(1).as("v"))
-        StatefulDedup.firstSeenExact(src, "k")
+        StatefulDedup.firstSeen(src, "k")
           .writeStream.format("parquet")
           .option("path", outDir).option("checkpointLocation", ckDir)
           .trigger(Trigger.AvailableNow())
@@ -183,6 +156,40 @@ class StatefulDedupSpec extends SparkSuite {
     val out = StatefulDedup.firstSeen(df, "k").collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
     assert(out === Map("a" -> 1L, "b" -> 3L))
+  }
+
+  test("firstSeen admits a null key and the literal key \"null\" once each, " +
+      "across batches and a restart") {
+    val dir = Files.createTempDirectory("dedupnull").toString
+    val srcDir = s"$dir/in"; val outDir = s"$dir/out"; val ckDir = s"$dir/ck"
+    Files.createDirectories(Paths.get(srcDir))
+    def write(file: String, lines: Seq[String]): Unit =
+      Files.write(Paths.get(srcDir, file), lines.mkString("\n").getBytes("UTF-8"))
+    def runOnce(): Unit = {
+      val raw = spark.readStream.option("maxFilesPerTrigger", "1")
+        .format("text").load(srcDir)
+        .select(split(col("value"), ",").as("f"))
+      // an empty first field is the null key
+      val src = raw.select(when(col("f").getItem(0) =!= "", col("f").getItem(0)).as("k"),
+        col("f").getItem(1).as("v"))
+      StatefulDedup.firstSeen(src, "k")
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckDir)
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination(60000)
+    }
+    def got(): Seq[(Option[String], String)] = spark.read.parquet(outDir).collect()
+      .map(r => (Option(r.getString(0)), r.getString(1))).toSeq.sortBy(_._2)
+
+    write("b1.csv", Seq(",1", "null,2", ",3", "null,4"))
+    runOnce()
+    assert(got() === Seq(None -> "1", Some("null") -> "2"))
+    // a restart that runs two more batches (one file per trigger): both
+    // keys stay seen in each
+    write("b2.csv", Seq("null,5", ",6", "x,7"))
+    write("b3.csv", Seq(",8", "null,9"))
+    runOnce()
+    assert(got() === Seq(None -> "1", Some("null") -> "2", Some("x") -> "7"))
   }
 
   test("streaming corpus intake: quality gate + cross-batch exact dedup") {
@@ -581,43 +588,32 @@ class StatefulDedupSpec extends SparkSuite {
     } finally { if (q.isActive) { q.stop(); q.awaitTermination() } }
   }
 
-  test("restart from a pre-versioned (Boolean-state) checkpoint fails loudly") {
-    import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryException}
-
-    val dir = Files.createTempDirectory("dedupver").toString
+  /** Write a checkpoint with `oldGate`, then restart it with the current
+    * [[StatefulDedup.firstSeen]]: the restart must fail at query start with
+    * the operator-mismatch error, and admit nothing. */
+  private def assertOldCheckpointRefused(name: String)(
+      oldGate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val dir = Files.createTempDirectory(name).toString
     val srcDir = s"$dir/in"; val outDir = s"$dir/out"; val ckDir = s"$dir/ck"
     Files.createDirectories(Paths.get(srcDir))
     def write(file: String, lines: Seq[String]): Unit =
       Files.write(Paths.get(srcDir, file), lines.mkString("\n").getBytes("UTF-8"))
-    def src(): DataFrame = spark.readStream.format("text").load(srcDir)
+    def src() = spark.readStream.format("text").load(srcDir)
       .select(split(col("value"), ",").getItem(0).as("k"),
         split(col("value"), ",").getItem(1).as("v"))
 
-    // inline replica of the pre-r8 operator: BARE BOOLEAN state (and the
-    // old unprefixed key encoding) — writes a legacy-format checkpoint
-    def oldFirstSeen(df: DataFrame): DataFrame = {
-      implicit val rowEnc: Encoder[Row] = Encoders.row(df.schema)
-      implicit val boolEnc: Encoder[Boolean] = Encoders.scalaBoolean
-      df.groupByKey(r => String.valueOf(r.get(0)))(Encoders.STRING)
-        .flatMapGroupsWithState[Boolean, Row](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-          (_: String, rows: Iterator[Row], state: GroupState[Boolean]) =>
-            if (state.exists) Iterator.empty
-            else { state.update(true); rows.take(1) }
-        }
-    }
     write("b1.csv", Seq("a,1", "b,2"))
-    oldFirstSeen(src())
+    oldGate(src())
       .writeStream.format("parquet")
       .option("path", outDir).option("checkpointLocation", ckDir)
       .trigger(Trigger.AvailableNow())
       .start().awaitTermination(60000)
     assert(spark.read.parquet(outDir).count() === 2)
 
-    // restart the SAME checkpoint with the current versioned operator:
-    // the state-schema check must refuse it at query start — a silent
-    // run here would re-admit key "a" (the r6/r7 failure mode)
+    // restart the SAME checkpoint with the native gate: Spark's operator
+    // metadata check must refuse it at query start — a silent run here
+    // would re-admit key "a"
     write("b2.csv", Seq("a,9", "c,4"))
     val ex = intercept[StreamingQueryException] {
       StatefulDedup.firstSeen(src(), "k")
@@ -628,9 +624,50 @@ class StatefulDedupSpec extends SparkSuite {
     }
     val msg = Option(ex.getMessage).getOrElse("") +
       Option(ex.getCause).map(_.toString).getOrElse("")
-    assert(msg.toLowerCase.contains("schema"),
-      s"expected a state-schema incompatibility, got: $msg")
+    assert(msg.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"),
+      s"expected the stateful-operator mismatch error, got: $msg")
     // and nothing was silently re-admitted
     assert(spark.read.parquet(outDir).count() === 2)
+  }
+
+  test("restart from a pre-versioned (Boolean-state) checkpoint fails loudly") {
+    import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    // inline replica of the pre-r8 operator: BARE BOOLEAN state and the
+    // unprefixed key encoding
+    assertOldCheckpointRefused("dedupver") { df =>
+      implicit val rowEnc: Encoder[Row] = Encoders.row(df.schema)
+      implicit val boolEnc: Encoder[Boolean] = Encoders.scalaBoolean
+      df.groupByKey(r => String.valueOf(r.get(0)))(Encoders.STRING)
+        .flatMapGroupsWithState[Boolean, Row](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (_: String, rows: Iterator[Row], state: GroupState[Boolean]) =>
+            if (state.exists) Iterator.empty
+            else { state.update(true); rows.take(1) }
+        }
+    }
+  }
+
+  test("restart from the flatMapGroupsWithState gate's (string key + " +
+      "SeenState(2)) checkpoint fails loudly") {
+    import org.apache.spark.sql.{Encoder, Encoders, Row}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import StatefulDedup.SeenState
+    // inline replica of the gate this operator replaced: "k"+v group key
+    // ("\u0000null" for a null key) and a versioned SeenState(2) marker
+    assertOldCheckpointRefused("dedupfmgws") { df =>
+      implicit val rowEnc: Encoder[Row] = Encoders.row(df.schema)
+      implicit val stEnc: Encoder[SeenState] = Encoders.product[SeenState]
+      df.groupByKey { r =>
+        val v = r.get(0)
+        if (v == null) "\u0000null" else "k" + v
+      }(Encoders.STRING)
+        .flatMapGroupsWithState[SeenState, Row](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (_: String, rows: Iterator[Row], state: GroupState[SeenState]) =>
+            if (state.exists) Iterator.empty
+            else { state.update(SeenState(2)); rows.take(1) }
+        }
+    }
   }
 }

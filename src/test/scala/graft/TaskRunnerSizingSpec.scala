@@ -82,37 +82,23 @@ class TaskRunnerSizingSpec extends SparkSuite {
       "sharding must still apply downstream of the gate")
     assert(got1.count() === 3) // a, b, c — first-seen within the batch
 
-    // restart the SAME checkpoint with an explicit DIFFERENT sizing:
+    // restart the SAME checkpoint with a config that sizes DIFFERENTLY:
     // the checkpointed count wins (OffsetSeqMetadata) and keys admitted
     // before the restart stay suppressed
+    val resized = cfg.copy(bufferSize = 65536)
+    assert(StatefulDedup.statePartitionsFor(resized.bufferSize.toLong) === 8)
     Files.write(Paths.get(srcDir, "b2.jsonl"),
       lines(Seq("a" -> 9, "d" -> 6)).mkString("\n").getBytes("UTF-8"))
-    val q2 = TaskRunner.run(cfg, source(), new ParquetSink(outDir), ckDir,
-      numShards = 2, dedupKey = Some("name"), statePartitions = Some(7))
+    val q2 = TaskRunner.run(resized, source(), new ParquetSink(outDir), ckDir,
+      numShards = 2, dedupKey = Some("name"))
     try q2.processAllAvailable() finally q2.stop()
     val got2 = spark.read.parquet(outDir)
+    assert(got2.filter(col("name") === "d" && col("__shard").isNotNull).count() === 1,
+      "sharding must still apply downstream of the gate after the restart")
     assert(got2.count() === 4, "only 'd' is new after the restart")
     assert(got2.filter(col("name") === "a").count() === 1,
       "duplicate 'a' re-admitted across restart")
     assert(partDirs(ckDir) === Set("0", "1"),
-      "checkpointed sizing must win over a later explicit override")
-  }
-
-  test("explicit statePartitions override wins on a fresh checkpoint") {
-    val dir = Files.createTempDirectory("trsized2").toString
-    val srcDir = s"$dir/in"; val outDir = s"$dir/out"; val ckDir = s"$dir/ck"
-    Files.createDirectories(Paths.get(srcDir))
-    Files.write(Paths.get(srcDir, "b1.jsonl"),
-      lines(Seq("a" -> 1, "b" -> 2)).mkString("\n").getBytes("UTF-8"))
-    val cfg = TaskConfig.fromJson(cfgJson)
-    val source = spark.readStream.format("text").load(srcDir)
-      .select(col("value"), lit("t").as("topic"),
-        lit(0).as("partition"), lit(0L).as("offset"))
-    val q = TaskRunner.run(cfg, source, new ParquetSink(outDir), ckDir,
-      availableNow = true, dedupKey = Some("name"),
-      statePartitions = Some(5))
-    q.awaitTermination(60000)
-    assert(partDirs(ckDir) === Set("0", "1", "2", "3", "4"))
-    assert(spark.read.parquet(outDir).count() === 2)
+      "checkpointed sizing must win over a later config's sizing")
   }
 }
