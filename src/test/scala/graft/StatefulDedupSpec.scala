@@ -55,6 +55,38 @@ class StatefulDedupSpec extends SparkSuite {
     assert(rows2.toMap === Map("a" -> "1", "b" -> "2", "c" -> "4"))
   }
 
+  // firstSeenExact was the name of the native-dropDuplicates gate; firstSeen
+  // is that operator now, and this spec keeps pinning it under the old name
+  test("firstSeenExact (native dedup op) suppresses across batches and restarts") {
+    val dir = Files.createTempDirectory("dedupx").toString
+    val srcDir = s"$dir/in"; val outDir = s"$dir/out"; val ckDir = s"$dir/ck"
+    Files.createDirectories(Paths.get(srcDir))
+    def write(file: String, lines: Seq[String]): Unit =
+      Files.write(Paths.get(srcDir, file), lines.mkString("\n").getBytes("UTF-8"))
+    def runOnce(): Unit = {
+      val src = spark.readStream.format("text").load(srcDir)
+        .select(split(col("value"), ",").getItem(0).as("k"),
+          split(col("value"), ",").getItem(1).as("v"))
+      StatefulDedup.firstSeen(src, "k")
+        .writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckDir)
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination(60000)
+    }
+    write("b1.csv", Seq("a,1", "b,2", "a,3"))
+    runOnce()
+    assert(spark.read.parquet(outDir).select("k").distinct().count() === 2)
+    assert(spark.read.parquet(outDir).count() === 2) // one row per key
+    // restart: checkpointed native-dedup state suppresses old keys
+    write("b2.csv", Seq("a,9", "c,4"))
+    runOnce()
+    val got = spark.read.parquet(outDir).collect()
+      .map(r => (r.getString(0), r.getString(1)))
+    assert(got.length === 3)
+    assert(got.count(_._1 == "a") === 1, "duplicate 'a' re-admitted after restart")
+    assert(got.toMap.apply("c") === "4")
+  }
+
   test("firstSeen passes across restarts on the RocksDB state store too") {
     // the large-state deployment dial documented on StatefulDedup: same
     // semantics, state off-heap
