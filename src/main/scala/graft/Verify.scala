@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -13,18 +14,20 @@ object Verify {
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    val copies = (graft.queries.LlmPipeline.oracleInputCopies ++
-      graft.queries.CorpusExtras.oracleInputCopies ++
-      graft.queries.Round8.oracleInputCopies).toSet
-    val copyDir = graft.queries.LlmPipeline.oracleInputDir
+    val copies = SparkEntry.registry.filter(_.readBack).map(_.name).toSet
+    val copyDir = SparkEntry.oracleInputDir
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // a query that throws must leave no output from an earlier run
+      // behind, or the compare would grade that stale result
+      FileUtils.deleteQuietly(new java.io.File(s"$outDir/$name"))
+      FileUtils.deleteQuietly(new java.io.File(s"$copyDir/$name.parquet"))
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        // read-back oracles (q24/q28/q31) reference this result at a fixed
-        // path the driver's DuckDB can see regardless of its outDir choice
+        // read-back oracles reference this result at a fixed path the
+        // driver's DuckDB can see regardless of its outDir choice
         if (copies.contains(name))
           spark.read.parquet(s"$outDir/$name").coalesce(1)
             .write.mode("overwrite").parquet(s"$copyDir/$name.parquet")

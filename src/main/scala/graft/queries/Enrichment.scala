@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.enrich.{ClassNormalize, IpEnrich, IpRange}
 
 /** Oracle-checked exercises of the nali enrichment stack (SURVEY §2.3):
@@ -119,14 +119,8 @@ object Enrichment {
       graft.enrich.Cdn.lookup(cdnMap)(domain).as("cdn"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q15_ip_enrich" -> q15IpEnrich _,
-    "q16_class_normalize" -> q16ClassNormalize _,
-    "q27_entity_extract" -> q27EntityExtract _,
-    "q34_cdn_lookup" -> q34CdnLookup _)
-
-  val oracles: Map[String, String] = Map(
-    "q15_ip_enrich" ->
+  val entries: Seq[Query] = Seq(
+    Query("q15_ip_enrich", q15IpEnrich,
       """WITH ips AS (
         |  SELECT event_id,
         |    CAST(user_id % 80 AS VARCHAR) || '.' ||
@@ -148,8 +142,8 @@ object Enrichment {
         |       WHEN k % 3 = 0 THEN '未知'
         |       ELSE n_name || '-ISP' END AS isp_src
         |FROM ips LEFT JOIN ranges ON ipl BETWEEN lo AND hi
-        |ORDER BY event_id""".stripMargin,
-    "q16_class_normalize" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q16_class_normalize", q16ClassNormalize,
       """WITH svc AS (
         |  SELECT key, service FROM read_csv(
         |    '/root/repo/src/main/resources/graft/service_map.tsv',
@@ -174,8 +168,8 @@ object Enrichment {
         |FROM f
         |LEFT JOIN svc s ON s.key = f.proto || ':' || CAST(f.psrc AS VARCHAR)
         |LEFT JOIN svc d ON d.key = f.proto || ':' || CAST(f.pdst AS VARCHAR)
-        |ORDER BY event_id""".stripMargin,
-    "q34_cdn_lookup" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q34_cdn_lookup", q34CdnLookup,
       """SELECT event_id,
         |  CASE user_id % 4
         |    WHEN 0 THEN 'cdn.cloudfront.net'
@@ -187,8 +181,8 @@ object Enrichment {
         |    WHEN 1 THEN 'Akamai'
         |    WHEN 2 THEN '阿里云 CDN'
         |    ELSE NULL END AS cdn
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q27_entity_extract" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q27_entity_extract", q27EntityExtract,
       """SELECT event_id,
         |  CAST(user_id % 80 AS VARCHAR) || '.' ||
         |  CAST((user_id * 7) % 256 AS VARCHAR) || '.' ||
@@ -196,5 +190,5 @@ object Enrichment {
         |  CAST(user_id % 256 AS VARCHAR) AS ipv4,
         |  event_type || '.example.com' AS domain,
         |  2 AS n_entities
-        |FROM events ORDER BY event_id""".stripMargin)
+        |FROM events ORDER BY event_id""".stripMargin))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.SparkEntry.oracleInputDir
 import graft.functions.{ColumnBridge, Hashes}
 import graft.operators.{Ann, Bm25, Contamination, CorpusMix, DedupPipeline, DupSpans, JaccardJoin, MinHashLsh, Multimodal, Pq, SemanticDedup, SeqPack, SimHash}
 
@@ -20,7 +21,7 @@ import graft.operators.{Ann, Bm25, Contamination, CorpusMix, DedupPipeline, DupS
 object LlmPipeline {
 
   /** documents ∪ first-word-dropped copies of the longer docs. */
-  private[queries] def augmentedDocs(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def augmentedDocs(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.parallel(s, dir, "documents")
     val perturbed = docs
       .filter(col("n_chars") >= 100)
@@ -438,11 +439,6 @@ object LlmPipeline {
     graft.operators.ClusterDedup.clusterReps(pairs)
   }
 
-  /** Fixed location Verify copies selected results to, so read-back
-    * oracles (q24/q28/q31) can reference a stable absolute path — the
-    * driver chooses its own outDir, which the oracle SQL can't see. */
-  val oracleInputDir = "/root/repo/target/oracle_inputs"
-
   /** q37: benchmark decontamination — distinct 4-word-gram overlap of
     * every training-split doc (doc_id % 20 != 0) against the held-out
     * benchmark split (doc_id % 20 == 0). The operator
@@ -706,13 +702,13 @@ object LlmPipeline {
     * verdict fails the gate. */
   /** q47's corpus (embeddings ∪ double-scaled copies — cosine-identical
     * planted near-dups) and its cell count — factored out so the
-    * ScaleBench stage probes ([[StageProbes]]) can time the row's
+    * ScaleBench stage probes ([[graft.tools.StageProbes]]) can time the row's
     * prefix stages against the full row. Cell COUNT scales with the
     * corpus so cell POPULATION stays fixed (~512): the in-cell
     * quadratic scan then grows linearly with data, which is the whole
     * point of clustering-as-blocking. Oracle-safe because the
     * read-back oracle accepts whatever cells were assigned. */
-  private[queries] def q47Corpus(s: SparkSession, dir: String): (DataFrame, Int) = {
+  private[graft] def q47Corpus(s: SparkSession, dir: String): (DataFrame, Int) = {
     val emb = Tables.parallel(s, dir, "embeddings")
     val scaled = emb.select(
       (col("vec_id") + 1000000L).as("vec_id"),
@@ -870,53 +866,9 @@ object LlmPipeline {
         nShards = 32, seed = 42L)
       .orderBy("shard", "pos")
 
-  /** Queries whose oracle reads the query's own output back and
-    * re-derives the SQL-expressible part from the raw tables. */
-  val oracleInputCopies: Seq[String] =
-    Seq("q24_simhash_neardup", "q28_ivf_ann", "q31_winnow_neardup",
-      "q42_quantiles_approx", "q45_distinct_approx", "q47_semantic_dedup",
-      "q53_reshard", "q67_pq_ann", "q74_tdigest_quantiles")
-
-  private def readBack(name: String): String =
-    s"read_parquet('$oracleInputDir/$name.parquet/*.parquet')"
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q18_minhash_neardup" -> q18MinhashNearDup _,
-    "q28_ivf_ann" -> q28IvfAnn _,
-    "q67_pq_ann" -> q67PqAnn _,
-    "q31_winnow_neardup" -> q31WinnowNearDup _,
-    "q19_ann_topk" -> q19AnnTopK _,
-    "q20_lang_id" -> q20LangId _,
-    "q21_text_quality" -> q21TextQuality _,
-    "q22_token_count" -> q22TokenCount _,
-    "q23_fingerprint" -> q23Fingerprint _,
-    "q24_simhash_neardup" -> q24SimhashNearDup _,
-    "q25_embed_neardup" -> q25EmbedNearDup _,
-    "q26_media_meta" -> q26MediaMeta _,
-    "q32_cluster_dedup" -> q32ClusterDedup _,
-    "q33_embed_neardup_lsh" -> q33EmbedNearDupLsh _,
-    "q35_repetition" -> q35Repetition _,
-    "q36_pii_extract" -> q36PiiExtract _,
-    "q37_contamination" -> q37Contamination _,
-    "q38_dedup_corpus" -> q38DedupCorpus _,
-    "q39_corpus_mix" -> q39CorpusMix _,
-    "q40_quality_filter" -> q40QualityFilter _,
-    "q41_corpus_build" -> q41CorpusBuild _,
-    "q43_jaccard_neardup" -> q43JaccardNearDup _,
-    "q44_seq_pack" -> q44SeqPack _,
-    "q45_distinct_approx" -> q45DistinctApprox _,
-    "q46_corpus_pack" -> q46CorpusPack _,
-    "q47_semantic_dedup" -> q47SemanticDedup _,
-    "q48_bm25_topk" -> q48Bm25TopK _,
-    "q49_dup_spans" -> q49DupSpans _,
-    "q50_perplexity" -> q50Perplexity _,
-    "q51_incremental_dedup" -> q51IncrementalDedup _,
-    "q52_pii_redact" -> q52PiiRedact _,
-    "q53_reshard" -> q53Reshard _)
-
   /** Exhaustive all-pairs k-gram Jaccard ground truth — ONE definition
     * shared by q18 (MinHash-LSH), q43 (exact PPJoin), and q114's
-    * Zipf-hot skew gate ([[Round15]]), so every blocking algorithm is
+    * Zipf-hot skew gate ([[DedupGates]]), so every blocking algorithm is
     * cross-validated against the identical oracle shape. `corpusCte`
     * must define an `aug(doc_id, text)` CTE body. */
   private[queries] def exactJaccardPairsSql(k: Int, threshold: String,
@@ -942,13 +894,17 @@ object LlmPipeline {
       |ORDER BY id_a, id_b""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q18_minhash_neardup" -> exactJaccardPairsSql(3, "0.8"),
-    "q43_jaccard_neardup" -> exactJaccardPairsSql(3, "0.8"),
-    "q45_distinct_approx" ->
+  /** The 3-gram Jaccard ≥ 0.8 ground truth over the augmented corpus:
+    * q18's and q43's oracle, and q118's (the stop-gram bind path). */
+  private[queries] val jaccardNearDupSql = exactJaccardPairsSql(3, "0.8")
+
+  val entries: Seq[Query] = Seq(
+    Query("q18_minhash_neardup", q18MinhashNearDup, jaccardNearDupSql),
+    Query("q43_jaccard_neardup", q43JaccardNearDup, jaccardNearDupSql),
+    Query("q45_distinct_approx", q45DistinctApprox,
       s"""WITH a AS (
         |  SELECT lang, approx_distinct
-        |  FROM ${readBack("q45_distinct_approx")}),
+        |  FROM read_parquet('$oracleInputDir/q45_distinct_approx.parquet/*.parquet')),
         |e AS (
         |  SELECT lang, CAST(count(DISTINCT tok) AS BIGINT) AS exact_distinct
         |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS tok
@@ -959,8 +915,8 @@ object LlmPipeline {
         |    / e.exact_distinct, 6) AS rel_err,
         |  round(CAST(abs(a.approx_distinct - e.exact_distinct) AS DOUBLE)
         |    / e.exact_distinct, 6) <= 0.05 AS within_tol
-        |FROM a JOIN e USING (lang) ORDER BY lang""".stripMargin,
-    "q44_seq_pack" ->
+        |FROM a JOIN e USING (lang) ORDER BY lang""".stripMargin, readBack = true),
+    Query("q44_seq_pack", q44SeqPack,
       s"""WITH t0 AS (SELECT doc_id,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
         |FROM documents),
@@ -980,8 +936,8 @@ object LlmPipeline {
         |  CAST(CASE WHEN n_tokens = 0 THEN 0
         |       ELSE (ts + n_tokens - 1) // 512 - ts // 512 + 1 END
         |    AS BIGINT) AS n_seqs
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q19_ann_topk" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Query("q19_ann_topk", q19AnnTopK,
       """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv
         |           FROM embeddings WHERE vec_id < 10),
         |c AS (SELECT vec_id AS nn_id, embedding::DOUBLE[] AS cv FROM embeddings),
@@ -994,8 +950,8 @@ object LlmPipeline {
         |      ORDER BY cos DESC, nn_id ASC) AS INTEGER) AS rank
         |  FROM scored)
         |SELECT q_id, rank, nn_id, cos FROM ranked
-        |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin,
-    "q20_lang_id" ->
+        |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin),
+    Query("q20_lang_id", q20LangId,
       """WITH t AS (SELECT doc_id, ' ' || text || ' ' AS p FROM documents),
         |s AS (SELECT doc_id,
         |  (length(p) - length(replace(p, ' the ', ''))) // 5 +
@@ -1012,8 +968,8 @@ object LlmPipeline {
         |       WHEN s_de >= greatest(s_fr, s_es) THEN 'de'
         |       WHEN s_fr >= s_es THEN 'fr'
         |       ELSE 'es' END AS lang_guess
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q21_text_quality" ->
+        |FROM s ORDER BY doc_id""".stripMargin),
+    Query("q21_text_quality", q21TextQuality,
       """WITH t AS (SELECT doc_id, text,
         |  CAST(length(text) AS BIGINT) AS n_chars_m,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -1026,8 +982,8 @@ object LlmPipeline {
         |  (n_tokens >= 5 AND n_tokens <= 1000 AND
         |   round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) >= 0.05)
         |    AS quality_ok
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q22_token_count" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    Query("q22_token_count", q22TokenCount,
       """WITH t AS (SELECT lang,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ws,
         |  CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))
@@ -1037,15 +993,15 @@ object LlmPipeline {
         |  CAST(sum(ws) AS BIGINT) AS sum_ws_toks,
         |  CAST(sum(re) AS BIGINT) AS sum_re_toks,
         |  round(CAST(sum(ws) AS DOUBLE) / count(*), 6) AS avg_ws_toks
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-    "q23_fingerprint" ->
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q23_fingerprint", q23Fingerprint,
       """SELECT source, count(DISTINCT lower(trim(text))) AS n_unique,
         | count(*) AS n_docs
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
     // Read-back oracles (q24/q28/q31): re-derive every SQL-expressible
     // column of the returned rows from the raw tables; see each query's
     // scaladoc for the verified-vs-echoed split.
-    "q24_simhash_neardup" ->
+    Query("q24_simhash_neardup", q24SimhashNearDup,
       s"""WITH $augmentedSql,
         |sh AS (
         |  SELECT doc_id,
@@ -1055,7 +1011,7 @@ object LlmPipeline {
         |           string_split(text, ' ')[i+1] || ' ' ||
         |           string_split(text, ' ')[i+2])) AS s
         |  FROM aug),
-        |pairs AS (SELECT id_a, id_b, hamming FROM ${readBack("q24_simhash_neardup")})
+        |pairs AS (SELECT id_a, id_b, hamming FROM read_parquet('$oracleInputDir/q24_simhash_neardup.parquet/*.parquet'))
         |SELECT p.id_a, p.id_b, p.hamming,
         |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
         |    len(list_distinct(list_concat(a.s, b.s))) AS jaccard
@@ -1064,10 +1020,10 @@ object LlmPipeline {
         |JOIN sh b ON b.doc_id = p.id_b
         |WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
         |    len(list_distinct(list_concat(a.s, b.s))) >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q67_pq_ann" ->
+        |ORDER BY id_a, id_b""".stripMargin, readBack = true),
+    Query("q67_pq_ann", q67PqAnn,
       s"""WITH pairs AS (
-        |  SELECT q_id, nn_id FROM ${readBack("q67_pq_ann")}),
+        |  SELECT q_id, nn_id FROM read_parquet('$oracleInputDir/q67_pq_ann.parquet/*.parquet')),
         |emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |rescored AS (
         |  SELECT p.q_id, p.nn_id,
@@ -1079,10 +1035,10 @@ object LlmPipeline {
         |  CAST(row_number() OVER (PARTITION BY q_id
         |    ORDER BY cos DESC, nn_id ASC) AS INTEGER) AS rank,
         |  nn_id, cos
-        |FROM rescored ORDER BY q_id, rank""".stripMargin,
-    "q28_ivf_ann" ->
+        |FROM rescored ORDER BY q_id, rank""".stripMargin, readBack = true),
+    Query("q28_ivf_ann", q28IvfAnn,
       s"""WITH pairs AS (
-        |  SELECT q_id, nn_id FROM ${readBack("q28_ivf_ann")}),
+        |  SELECT q_id, nn_id FROM read_parquet('$oracleInputDir/q28_ivf_ann.parquet/*.parquet')),
         |emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |rescored AS (
         |  SELECT p.q_id, p.nn_id,
@@ -1094,8 +1050,8 @@ object LlmPipeline {
         |  CAST(row_number() OVER (PARTITION BY q_id
         |    ORDER BY cos DESC, nn_id ASC) AS INTEGER) AS rank,
         |  nn_id, cos
-        |FROM rescored ORDER BY q_id, rank""".stripMargin,
-    "q31_winnow_neardup" ->
+        |FROM rescored ORDER BY q_id, rank""".stripMargin, readBack = true),
+    Query("q31_winnow_neardup", q31WinnowNearDup,
       s"""WITH $augmentedSql,
         |sh AS (
         |  SELECT doc_id,
@@ -1105,7 +1061,7 @@ object LlmPipeline {
         |           string_split(text, ' ')[i+1] || ' ' ||
         |           string_split(text, ' ')[i+2])) AS s
         |  FROM aug),
-        |pairs AS (SELECT id_a, id_b, shared_fps FROM ${readBack("q31_winnow_neardup")})
+        |pairs AS (SELECT id_a, id_b, shared_fps FROM read_parquet('$oracleInputDir/q31_winnow_neardup.parquet/*.parquet'))
         |SELECT p.id_a, p.id_b, p.shared_fps,
         |  CASE WHEN len(list_distinct(list_concat(a.s, b.s))) = 0 THEN 0.0
         |       ELSE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
@@ -1113,8 +1069,8 @@ object LlmPipeline {
         |FROM pairs p
         |JOIN sh a ON a.doc_id = p.id_a
         |JOIN sh b ON b.doc_id = p.id_b
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q25_embed_neardup" ->
+        |ORDER BY id_a, id_b""".stripMargin, readBack = true),
+    Query("q25_embed_neardup", q25EmbedNearDup,
       """WITH corpus AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings
         |  UNION ALL
@@ -1126,8 +1082,8 @@ object LlmPipeline {
         |FROM corpus a JOIN corpus b
         |  ON a.label = b.label AND a.vec_id < b.vec_id
         |WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q32_cluster_dedup" ->
+        |ORDER BY id_a, id_b""".stripMargin),
+    Query("q32_cluster_dedup", q32ClusterDedup,
       s"""WITH RECURSIVE $augmentedSql,
         |sh AS (
         |  SELECT doc_id,
@@ -1150,8 +1106,8 @@ object LlmPipeline {
         |  UNION
         |  SELECT r.s, e2.d FROM reach r JOIN e e2 ON r.d = e2.s)
         |SELECT s AS doc_id, CAST(least(s, min(d)) AS BIGINT) AS rep_id
-        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin,
-    "q33_embed_neardup_lsh" ->
+        |FROM reach GROUP BY s ORDER BY doc_id""".stripMargin),
+    Query("q33_embed_neardup_lsh", q33EmbedNearDupLsh,
       """WITH corpus AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
         |  UNION ALL
@@ -1161,8 +1117,8 @@ object LlmPipeline {
         |  round(list_cosine_similarity(a.v, b.v), 6) AS cos
         |FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
         |WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.999
-        |ORDER BY id_a, id_b""".stripMargin,
-    "q35_repetition" ->
+        |ORDER BY id_a, id_b""".stripMargin),
+    Query("q35_repetition", q35Repetition,
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
         |g AS (
         |  SELECT doc_id, unnest(list_transform(
@@ -1175,16 +1131,16 @@ object LlmPipeline {
         |  CAST(max(n) AS BIGINT) AS top_bigram_n,
         |  round(CAST(max(n) AS DOUBLE) / sum(n), 6) AS top_frac,
         |  round(CAST(max(n) AS DOUBLE) / sum(n), 6) >= 0.18 AS repetitive
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q36_pii_extract" ->
+        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q36_pii_extract", q36PiiExtract,
       """SELECT event_id,
         |  event_type || CAST(user_id AS VARCHAR) || '@example.com' AS email_1,
         |  event_type || '_admin@corp.io' AS email_2,
         |  CAST(user_id % 900 + 100 AS VARCHAR) || '-' ||
         |    CAST((user_id * 7) % 9000 + 1000 AS VARCHAR) AS phone,
         |  CAST(3 AS BIGINT) AS n_pii
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q26_media_meta" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q26_media_meta", q26MediaMeta,
       """SELECT doc_id AS media_id, 'image' AS kind,
         | CAST(strlen(text) AS BIGINT) AS size_bytes,
         | CAST(strlen(text) % 640 AS INTEGER) AS width,
@@ -1219,8 +1175,8 @@ object LlmPipeline {
         | CAST(0 AS INTEGER) AS n_frames,
         | CAST(0 AS BIGINT) AS first_frame_offset,
         | 'quarantined' AS status
-        |FROM documents ORDER BY media_id""".stripMargin,
-    "q37_contamination" ->
+        |FROM documents ORDER BY media_id""".stripMargin),
+    Query("q37_contamination", q37Contamination,
       """WITH tw AS (SELECT doc_id, string_split(text, ' ') AS w
         |            FROM documents WHERE doc_id % 20 <> 0),
         |bw AS (SELECT string_split(text, ' ') AS w
@@ -1242,8 +1198,8 @@ object LlmPipeline {
         |FROM (SELECT doc_id FROM documents WHERE doc_id % 20 <> 0) d
         |LEFT JOIN tot ON tot.doc_id = d.doc_id
         |LEFT JOIN cnt ON cnt.doc_id = d.doc_id
-        |ORDER BY 1""".stripMargin,
-    "q38_dedup_corpus" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q38_dedup_corpus", q38DedupCorpus,
       s"""WITH RECURSIVE $augmentedSql,
         |aug2 AS (SELECT doc_id, text FROM aug
         |         UNION ALL
@@ -1282,8 +1238,8 @@ object LlmPipeline {
         |       ELSE 'kept' END AS stage,
         |  (g.doc_id = g.erep AND nd.doc_id IS NULL) AS kept
         |FROM g LEFT JOIN near_drop nd ON nd.doc_id = g.doc_id
-        |ORDER BY 1""".stripMargin,
-    "q39_corpus_mix" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q39_corpus_mix", q39CorpusMix,
       """WITH wt AS (
         |  SELECT 'src' || CAST(i AS VARCHAR) AS source,
         |    CAST(CASE i % 4 WHEN 0 THEN 0.0 WHEN 1 THEN 0.5
@@ -1297,8 +1253,8 @@ object LlmPipeline {
         |  FROM documents d JOIN wt USING(source))
         |SELECT doc_id, source, CAST(c AS BIGINT) AS copy
         |FROM n, UNNEST(range(1, nc + 1)) t(c)
-        |ORDER BY doc_id, copy""".stripMargin,
-    "q40_quality_filter" ->
+        |ORDER BY doc_id, copy""".stripMargin),
+    Query("q40_quality_filter", q40QualityFilter,
       """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS w
         |           FROM documents),
         |m AS (SELECT doc_id,
@@ -1316,13 +1272,13 @@ object LlmPipeline {
         |  (n_words BETWEEN 50 AND 10000 AND
         |   mean_word_len BETWEEN 3.0 AND 10.0 AND
         |   diversity >= 0.1 AND stop_ok) AS pass
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q41_corpus_build" ->
+        |FROM m ORDER BY doc_id""".stripMargin),
+    Query("q41_corpus_build", q41CorpusBuild,
       s"""$corpusBuildSqlPrefix
         |SELECT doc_id, source, CAST(c AS BIGINT) AS copy
         |FROM n, UNNEST(range(1, nc + 1)) t(c)
-        |ORDER BY doc_id, copy""".stripMargin,
-    "q46_corpus_pack" ->
+        |ORDER BY doc_id, copy""".stripMargin),
+    Query("q46_corpus_pack", q46CorpusPack,
       s"""$corpusBuildSqlPrefix,
         |mixed AS (
         |  SELECT doc_id, source, CAST(c AS BIGINT) AS copy
@@ -1351,10 +1307,10 @@ object LlmPipeline {
         |  CAST(CASE WHEN n_tokens = 0 THEN 0
         |       ELSE (ts + n_tokens - 1) // 512 - ts // 512 + 1 END
         |    AS BIGINT) AS n_seqs
-        |FROM cum ORDER BY row_id""".stripMargin,
-    "q47_semantic_dedup" ->
+        |FROM cum ORDER BY row_id""".stripMargin),
+    Query("q47_semantic_dedup", q47SemanticDedup,
       s"""WITH RECURSIVE out AS (
-        |  SELECT vec_id, cell FROM ${readBack("q47_semantic_dedup")}),
+        |  SELECT vec_id, cell FROM read_parquet('$oracleInputDir/q47_semantic_dedup.parquet/*.parquet')),
         |corpus AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
         |  UNION ALL
@@ -1377,8 +1333,8 @@ object LlmPipeline {
         |SELECT m.vec_id, m.cell,
         |  CAST(coalesce(rep.rep_id, m.vec_id) AS BIGINT) AS rep_id,
         |  coalesce(rep.rep_id, m.vec_id) = m.vec_id AS kept
-        |FROM m LEFT JOIN rep USING (vec_id) ORDER BY m.vec_id""".stripMargin,
-    "q48_bm25_topk" -> {
+        |FROM m LEFT JOIN rep USING (vec_id) ORDER BY m.vec_id""".stripMargin, readBack = true),
+    Query("q48_bm25_topk", q48Bm25TopK, {
       val values = bm25Queries
         .map { case (i, t) => s"($i, '$t')" }.mkString(", ")
       s"""WITH q(q_id, q_text) AS (VALUES $values),
@@ -1405,8 +1361,8 @@ object LlmPipeline {
         |  FROM agg)
         |SELECT q_id, rank, doc_id, score FROM r
         |WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
-    },
-    "q49_dup_spans" ->
+    }),
+    Query("q49_dup_spans", q49DupSpans,
       s"""WITH $augmentedSql,
         |toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM aug),
         |g2 AS (SELECT doc_id, i AS pos, array_to_string(w[i:i+9], ' ') AS gram
@@ -1435,8 +1391,8 @@ object LlmPipeline {
         |  round(CAST(coalesce(p.dup_tokens, 0) AS DOUBLE) / len(t.w), 6)
         |    AS dup_ratio
         |FROM toks t LEFT JOIN prof p USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q50_perplexity" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q50_perplexity", q50Perplexity,
       s"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS w
         |           FROM documents),
         |bo AS (SELECT doc_id, w[i] AS p, w[i] || ' ' || w[i+1] AS b
@@ -1467,8 +1423,8 @@ object LlmPipeline {
         |         <= CAST($perplexityMiddleMax AS DOUBLE) THEN 'middle'
         |       ELSE 'tail' END AS bucket
         |FROM d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q51_incremental_dedup" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q51_incremental_dedup", q51IncrementalDedup,
       """WITH hist AS (SELECT doc_id, text FROM documents),
         |newb AS (
         |  SELECT doc_id + 1000000 AS doc_id,
@@ -1511,16 +1467,16 @@ object LlmPipeline {
         |FROM newb n
         |LEFT JOIN ex ON ex.doc_id = n.doc_id
         |LEFT JOIN nr ON nr.doc_id = n.doc_id
-        |ORDER BY n.doc_id""".stripMargin,
-    "q52_pii_redact" ->
+        |ORDER BY n.doc_id""".stripMargin),
+    Query("q52_pii_redact", q52PiiRedact,
       """SELECT event_id,
         |  'user ' || CAST(user_id AS VARCHAR) ||
         |    ' contact <EMAIL> or <EMAIL> tel <PHONE> src <IP>' AS redacted,
         |  CAST(4 AS BIGINT) AS n_redacted
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q53_reshard" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q53_reshard", q53Reshard,
       s"""WITH o AS (SELECT doc_id, h, shard, pos
-        |           FROM ${readBack("q53_reshard")}),
+        |           FROM read_parquet('$oracleInputDir/q53_reshard.parquet/*.parquet')),
         |j AS (SELECT d.doc_id, o.h FROM documents d
         |      LEFT JOIN o ON o.doc_id = d.doc_id),
         |r AS (SELECT doc_id, h,
@@ -1530,7 +1486,7 @@ object LlmPipeline {
         |          ORDER BY h, doc_id) AS BIGINT) AS pos
         |      FROM j)
         |SELECT doc_id, h, shard, pos FROM r
-        |ORDER BY shard, pos""".stripMargin)
+        |ORDER BY shard, pos""".stripMargin, readBack = true))
 
   /** Shared WITH-chain of the corpus-build DAG oracle (quality gate →
     * exact dedup → transitive near-dup closure → decontamination → mix

@@ -124,11 +124,11 @@ object MediaCensusFixtures {
     * index-derived (+k·1M) — the census groups on `variant`, so only
     * uniqueness matters. */
   def variants(id: Long): Seq[(Long, String, Array[Byte])] = {
-    def px(x: Int, y: Int): Int = Round9.cellValue(id, (y / 2) * 9 + x / 2)
-    val w = Round9.imgW; val h = Round9.imgH
+    def px(x: Int, y: Int): Int = MediaDedup.cellValue(id, (y / 2) * 9 + x / 2)
+    val w = MediaDedup.imgW; val h = MediaDedup.imgH
 
     val bmp = ImageDedup.ImageBuild.bmp24Gray(w, h)(px)
-    val pcm16Samples = Array.tabulate(520)(i => Round9.frameAmp(id, i / 8))
+    val pcm16Samples = Array.tabulate(520)(i => MediaDedup.frameAmp(id, i / 8))
     val wav = AudioDedup.WavBuild.pcm16(pcm16Samples)
     val bmpRle = bmp.clone; bmpRle(BmpBitsPerPixel) = 8 // valid, o-o-scope
     // format 3 + bits 16: a "float" width the decode scope does NOT
@@ -148,7 +148,7 @@ object MediaCensusFixtures {
     val wavExtGuid = wavExt.clone; wavExtGuid(WavExtGuidByte) = 0x11
     val g711Codes = pcm16Samples.map(s => (s % 128).toByte)
     val adpcmNibbles =
-      Array.tabulate(64)(i => (Round9.frameAmp(id, i) % 256).toByte)
+      Array.tabulate(64)(i => (MediaDedup.frameAmp(id, i) % 256).toByte)
 
     val aviFrames = Seq(JpegBuild.gray(w, h)((x, y) => px(x, y)))
     val avi = MotionJpeg.AviBuild.mjpeg(w, h, aviFrames)
@@ -182,7 +182,7 @@ object MediaCensusFixtures {
       "jpeg_12bit" -> JpegBuild.precision12Twin(
         JpegBuild.gray(w, h)((x, y) => px(x, y))),
       "wav_pcm8" -> AudioDedup.WavBuild.pcm(
-        Array.tabulate(520)(i => Round9.frameAmp(id, i / 8) % 256),
+        Array.tabulate(520)(i => MediaDedup.frameAmp(id, i / 8) % 256),
         bits = 8),
       "wav_f64" -> AudioDedup.WavBuild.float64(
         pcm16Samples.map(_ / 32768.0)),

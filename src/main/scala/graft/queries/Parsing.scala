@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.schema.{ColumnSpec, CType}
 import graft.sources.{MessageParser, ParserConfig}
 
@@ -99,12 +99,8 @@ object Parsing {
       .drop("arr")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q13_json_parse" -> q13JsonParse _,
-    "q14_csv_parse" -> q14CsvParse _)
-
-  val oracles: Map[String, String] = Map(
-    "q13_json_parse" ->
+  val entries: Seq[Query] = Seq(
+    Query("q13_json_parse", q13JsonParse,
       """SELECT event_id,
         | event_type AS etype,
         | value AS val,
@@ -120,13 +116,13 @@ object Parsing {
         | 'events' AS __kafka_topic,
         | event_id % 4 AS __kafka_partition,
         | event_id AS __kafka_offset
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q14_csv_parse" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q14_csv_parse", q14CsvParse,
       """SELECT event_id AS id,
         | event_type AS etype,
         | value AS val,
         | date_trunc('milliseconds', ts) AS ts_parsed,
         | CAST(NULL AS VARCHAR) AS maybe,
         | concat(CAST(event_id AS VARCHAR), '|', CAST(user_id AS VARCHAR)) AS arr_joined
-        |FROM events ORDER BY event_id""".stripMargin)
+        |FROM events ORDER BY event_id""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Round-7 pipeline operators: per-key quotas, time-series gap fill,
   * and incrementally-maintained aggregates. Same conventions as
@@ -162,17 +162,8 @@ object PipelineExtras {
       p
     })
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q61_source_quota" -> q61SourceQuota _,
-    "q62_with_fill" -> q62WithFill _,
-    "q63_incr_agg" -> q63IncrAgg _,
-    "q64_source_overlap" -> q64SourceOverlap _,
-    "q65_doc_chunk" -> q65DocChunk _,
-    "q66_quality_topfrac" -> q66QualityTopfrac _,
-    "q69_hash_sample" -> q69HashSample _)
-
-  val oracles: Map[String, String] = Map(
-    "q61_source_quota" ->
+  val entries: Seq[Query] = Seq(
+    Query("q61_source_quota", q61SourceQuota,
       // the double-% form is DuckDB's pmod: non-negative like the Spark
       // side's pmod even if a future data generation ships negative ids
       // (a multiply overflow errors loudly in DuckDB instead of wrapping)
@@ -186,8 +177,8 @@ object PipelineExtras {
         |        % 1000000007, doc_id) AS rank
         |  FROM documents) t
         |WHERE rank <= 15
-        |ORDER BY source, rank""".stripMargin,
-    "q65_doc_chunk" ->
+        |ORDER BY source, rank""".stripMargin),
+    Query("q65_doc_chunk", q65DocChunk,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS w,
         |             len(string_split(text, ' ')) AS n FROM documents),
         |e AS (SELECT doc_id, w, n, CAST(i AS BIGINT) AS i
@@ -198,16 +189,16 @@ object PipelineExtras {
         |  CAST(least(n - i + 1, 50) AS INT) AS n_tokens
         |FROM e
         |WHERE i = 1 OR n - i + 1 >= 10
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-    "q69_hash_sample" ->
+        |ORDER BY doc_id, chunk_id""".stripMargin),
+    Query("q69_hash_sample", q69HashSample,
       """SELECT source, count(*) AS n_sampled,
         |  min(doc_id) AS min_id, max(doc_id) AS max_id
         |FROM documents
         |WHERE ((doc_id * 2654435761) % 1000000007 + 1000000007)
         |  % 1000000007 < 100000000
         |GROUP BY source
-        |ORDER BY source""".stripMargin,
-    "q66_quality_topfrac" ->
+        |ORDER BY source""".stripMargin),
+    Query("q66_quality_topfrac", q66QualityTopfrac,
       """WITH t AS (SELECT source, doc_id,
         |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
         |           FROM documents),
@@ -218,8 +209,8 @@ object PipelineExtras {
         |      FROM t)
         |SELECT source, rank, doc_id, n_tokens FROM r
         |WHERE 10 * rank <= 7 * cnt
-        |ORDER BY source, rank""".stripMargin,
-    "q62_with_fill" ->
+        |ORDER BY source, rank""".stripMargin),
+    Query("q62_with_fill", q62WithFill,
       """WITH c AS (
         |  SELECT event_type, date_trunc('hour', ts) AS bucket,
         |    CAST(count(*) AS BIGINT) AS cnt,
@@ -240,8 +231,8 @@ object PipelineExtras {
         |  CAST(CASE WHEN c.cnt IS NULL THEN 1 ELSE 0 END AS INT) AS filled
         |FROM g LEFT JOIN c
         |  ON g.event_type = c.event_type AND g.bucket = c.bucket
-        |ORDER BY 1, 2""".stripMargin,
-    "q64_source_overlap" ->
+        |ORDER BY 1, 2""".stripMargin),
+    Query("q64_source_overlap", q64SourceOverlap,
       """WITH aug AS (
         |  SELECT doc_id, text, source FROM documents
         |  UNION ALL
@@ -270,8 +261,8 @@ object PipelineExtras {
         |JOIN aug sa ON pairs.id_a = sa.doc_id
         |JOIN aug sb ON pairs.id_b = sb.doc_id
         |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "q63_incr_agg" ->
+        |ORDER BY 1, 2""".stripMargin),
+    Query("q63_incr_agg", q63IncrAgg,
       """SELECT source, lang,
         |  CAST(count(*) AS BIGINT) AS cnt,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_v,
@@ -279,5 +270,5 @@ object PipelineExtras {
         |  CAST(max(n_chars) AS BIGINT) AS max_v,
         |  round(CAST(sum(n_chars) AS DOUBLE) / count(*), 4) AS avg_v
         |FROM documents GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin)
+        |ORDER BY 1, 2""".stripMargin))
 }

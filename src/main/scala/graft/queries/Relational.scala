@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Query, Tables}
+import graft.SparkEntry.oracleInputDir
 
 /** Relational operator suite (SURVEY.md §2.6): aggregation, broadcast /
   * range / semi / anti joins, windows, top-k, set ops, rollup, dedup.
@@ -270,36 +271,18 @@ object Relational {
       .orderBy("click_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_agg_pushdown" -> q01AggPushdown _,
-    "q29_quantiles" -> q29Quantiles _,
-    "q42_quantiles_approx" -> q42QuantilesApprox _,
-    "q74_tdigest_quantiles" -> q74TdigestQuantiles _,
-    "q30_asof_join" -> q30AsofJoin _,
-    "q02_star_join" -> q02StarJoin _,
-    "q03_range_join" -> q03RangeJoin _,
-    "q04_semi_join" -> q04SemiJoin _,
-    "q05_anti_join" -> q05AntiJoin _,
-    "q06_window_topn" -> q06WindowTopN _,
-    "q07_time_bucket" -> q07TimeBucket _,
-    "q08_dedup_exact" -> q08DedupExact _,
-    "q09_topk" -> q09TopK _,
-    "q10_intersect" -> q10Intersect _,
-    "q11_rollup" -> q11Rollup _,
-    "q12_first_seen" -> q12FirstSeen _)
-
-  val oracles: Map[String, String] = Map(
-    "q30_asof_join" ->
+  val entries: Seq[Query] = Seq(
+    Query("q30_asof_join", q30AsofJoin,
       """SELECT c.event_id AS click_id, c.user_id, c.ts AS click_ts,
         | p.event_id AS prev_purchase_id, p.value AS prev_value
         |FROM (SELECT * FROM events WHERE event_type = 'click') c
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id AND c.ts >= p.ts
-        |ORDER BY click_id""".stripMargin,
-    "q42_quantiles_approx" ->
+        |ORDER BY click_id""".stripMargin),
+    Query("q42_quantiles_approx", q42QuantilesApprox,
       s"""WITH a AS (
         |  SELECT l_returnflag, p50, p90, p99
-        |  FROM read_parquet('${graft.queries.LlmPipeline.oracleInputDir}/q42_quantiles_approx.parquet/*.parquet')),
+        |  FROM read_parquet('$oracleInputDir/q42_quantiles_approx.parquet/*.parquet')),
         |j AS (
         |  SELECT a.l_returnflag, a.p50, a.p90, a.p99,
         |    CAST(l.l_extendedprice AS DOUBLE) AS v
@@ -317,11 +300,11 @@ object Relational {
         |  (lt50 - 0.01 <= 0.5 AND le50 + 0.01 >= 0.5) AS p50_ok,
         |  (lt90 - 0.01 <= 0.9 AND le90 + 0.01 >= 0.9) AS p90_ok,
         |  (lt99 - 0.01 <= 0.99 AND le99 + 0.01 >= 0.99) AS p99_ok
-        |FROM c ORDER BY 1""".stripMargin,
-    "q74_tdigest_quantiles" ->
+        |FROM c ORDER BY 1""".stripMargin, readBack = true),
+    Query("q74_tdigest_quantiles", q74TdigestQuantiles,
       s"""WITH a AS (
         |  SELECT l_suppkey, p50, p90, p99
-        |  FROM read_parquet('${graft.queries.LlmPipeline.oracleInputDir}/q74_tdigest_quantiles.parquet/*.parquet')),
+        |  FROM read_parquet('$oracleInputDir/q74_tdigest_quantiles.parquet/*.parquet')),
         |j AS (
         |  SELECT a.l_suppkey, a.p50, a.p90, a.p99,
         |    CAST(l.l_extendedprice AS DOUBLE) AS v
@@ -339,22 +322,22 @@ object Relational {
         |  (lt50 - 0.01 <= 0.5 AND le50 + 0.01 >= 0.5) AS p50_ok,
         |  (lt90 - 0.01 <= 0.9 AND le90 + 0.01 >= 0.9) AS p90_ok,
         |  (lt99 - 0.01 <= 0.99 AND le99 + 0.01 >= 0.99) AS p99_ok
-        |FROM c ORDER BY 1""".stripMargin,
-    "q29_quantiles" ->
+        |FROM c ORDER BY 1""".stripMargin, readBack = true),
+    Query("q29_quantiles", q29Quantiles,
       """SELECT l_returnflag,
         | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
         | round(quantile_cont(l_extendedprice, 0.9), 4) AS p90,
         | round(quantile_cont(l_extendedprice, 0.99), 4) AS p99
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q01_agg_pushdown" ->
+        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q01_agg_pushdown", q01AggPushdown,
       """SELECT l_returnflag, l_linestatus,
         | CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
         | CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
         | count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q02_star_join" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q02_star_join", q02StarJoin,
       """SELECT r_name,
         | CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
         | count(*) AS n_orders
@@ -362,8 +345,8 @@ object Relational {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q03_range_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q03_range_join", q03RangeJoin,
       """SELECT bucket_name, count(*) AS n_events,
         | CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
         |FROM events
@@ -372,42 +355,42 @@ object Relational {
         |             CAST(n_nationkey * 6 + 5 AS BIGINT) AS hi
         |      FROM nation) r
         |  ON user_id >= lo AND user_id <= hi
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q04_semi_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q04_semi_join", q04SemiJoin,
       """SELECT o_orderpriority, count(*) AS n_orders
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity >= 45.0)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q05_anti_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q05_anti_join", q05AntiJoin,
       """SELECT c_mktsegment, count(*) AS n_customers
         |FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q06_window_topn" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q06_window_topn", q06WindowTopN,
       """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    CAST(row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS INTEGER) AS rn
         |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-    "q07_time_bucket" ->
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin),
+    Query("q07_time_bucket", q07TimeBucket,
       """SELECT date_trunc('hour', ts) AS bucket, event_type, count(*) AS n,
         | CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q08_dedup_exact" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q08_dedup_exact", q08DedupExact,
       """SELECT lang, count(DISTINCT text) AS n_unique, count(*) AS n_docs
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q09_topk" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q09_topk", q09TopK,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q10_intersect" ->
+        |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""".stripMargin),
+    Query("q10_intersect", q10Intersect,
       """SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
         |INTERSECT
         |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY o_custkey""".stripMargin,
-    "q11_rollup" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Query("q11_rollup", q11Rollup,
       """SELECT r_name, n_name,
         | CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS sum_bal,
         | count(*) AS n
@@ -415,8 +398,8 @@ object Relational {
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin,
-    "q12_first_seen" ->
+        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin),
+    Query("q12_first_seen", q12FirstSeen,
       """SELECT user_id, event_type, min(event_id) AS first_event_id
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 }

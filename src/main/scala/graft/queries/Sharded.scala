@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.operators.Sharding
 
 /** Oracle-checked exercise of the row sharder (SURVEY §2.4 B4): stripe
@@ -25,14 +25,11 @@ object Sharded {
       .orderBy("shard_uid", "shard_hour")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q17_shard_distribution" -> q17ShardDistribution _)
-
-  val oracles: Map[String, String] = Map(
-    "q17_shard_distribution" ->
+  val entries: Seq[Query] = Seq(
+    Query("q17_shard_distribution", q17ShardDistribution,
       """SELECT CAST((user_id // 16) % 5 AS INTEGER) AS shard_uid,
         | CAST(((CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 3600) % 5)
         |   AS INTEGER) AS shard_hour,
         | count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
 }

@@ -14,9 +14,13 @@ import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, Semaphore, T
   *
   * Failure policy matches the reference's reconnect-on-error behavior
   * (output/clickhouse.go:161-194): a connection whose work function
-  * throws is closed, never returned to the pool — the retry/failover
-  * layer above re-dials through a fresh borrow. Idle connections are
-  * validity-checked on borrow and re-dialed if stale.
+  * throws is closed, never returned to the pool, and the next borrow
+  * dials afresh. Who retries depends on the caller: on the streaming
+  * path ([[JdbcExactlyOnceSink]]) the throw fails the Spark task and
+  * Spark's task retry borrows again; [[RetryingWriter]]'s replica
+  * failover runs only where a caller composes it (only specs do today).
+  * Idle connections are validity-checked on borrow and re-dialed if
+  * stale.
   *
   * Two bounds, mirroring the reference's pool knobs:
   *  - `maxOpenPerTarget` bounds OPEN physical connections per target
@@ -100,7 +104,8 @@ object ConnectionPool {
 
   /** Run `f` with a pooled (or freshly dialed) connection. The conn is
     * returned to the pool only on success; on any throw it is closed and
-    * the exception propagates to the retry/failover layer. */
+    * the exception propagates to the caller (see the class doc for who
+    * retries). */
   def withConnection[T](url: String, props: Properties)(f: Connection => T): T = {
     val e = pools.computeIfAbsent(key(url, props),
       _ => new Entry(maxIdlePerTarget, maxOpenPerTarget))

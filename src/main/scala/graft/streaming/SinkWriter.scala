@@ -9,6 +9,14 @@ import org.apache.spark.sql.{DataFrame, Row}
   * The orchestration logic is target-agnostic so it can be pinned by
   * tests without a database; [[JdbcInsertTarget]] is the real JDBC
   * implementation of the same trait.
+  *
+  * [[QuarantineWriter]] and [[RetryingWriter]] are not on the streaming
+  * path: [[JdbcExactlyOnceSink]] calls [[JdbcInsertTarget.replaceSlice]]
+  * directly, so a task running it never quarantines a bad row or
+  * rotates replicas — a failing slice fails the Spark task, and Spark's
+  * task retry replaces the slice. Only specs call the two writers today,
+  * so [[SinkStats]]' `FlushMsgsErrorTotal` and `ClickHouseReconnectTotal`
+  * stay 0 on a streaming task.
   */
 trait InsertTarget {
   /** Insert a whole batch transactionally; throw on failure. */
@@ -26,8 +34,9 @@ final class SinkUnavailableException(msg: String, cause: Throwable = null)
 
 /** Process-wide sink counters named after the reference's Prometheus
   * metrics (statistics/statistics.go:93-120): `FlushMsgsErrorTotal`
-  * (quarantined rows) and `ClickHouseReconnectTotal` (replica
-  * rotations). Per-JVM scope — in local mode that is the whole engine;
+  * (rows [[QuarantineWriter]] quarantined) and `ClickHouseReconnectTotal`
+  * (replica rotations by [[RetryingWriter]]); neither writer runs under
+  * [[JdbcExactlyOnceSink]], so both stay 0 there. Per-JVM scope — in local mode that is the whole engine;
   * on a cluster each executor's counters feed its metrics sink the way
   * each sinker process feeds its own pushgateway. */
 object SinkStats {
@@ -299,7 +308,14 @@ final class IdempotentParquetSink(path: String) extends BatchSink {
   * table needs the two provenance columns and, for probe-cost deletes
   * at scale, an index on them ([[JdbcExactlyOnceSink.ddlSuffix]]).
   * Connection state stays executor-local: the sink object is a small
-  * serializable recipe, the pool lives per executor JVM. */
+  * serializable recipe, the pool lives per executor JVM.
+  *
+  * It calls `replaceSlice` directly, without [[QuarantineWriter]] or
+  * [[RetryingWriter]]: a poison row or an unreachable target fails the
+  * whole slice and its task, nothing is quarantined, no replica is
+  * rotated, and the [[SinkStats]] counters are not touched. Recovery is
+  * Spark's task retry (and, past its limit, a failed query restarted
+  * from the checkpoint), which replays the slice. */
 final class JdbcExactlyOnceSink(
     url: String, table: String, columns: Seq[String],
     propsMap: Map[String, String] = Map.empty) extends BatchSink {

@@ -542,12 +542,12 @@ object ScaleBench {
         superLinear ::= n
       }
       // stage decomposition (r18 judge directive #5): rows registered
-      // in graft.queries.StageProbes time their named prefix
+      // in StageProbes time their named prefix
       // sub-pipelines at both scales, every sweep — the r18 q50
       // prefix decomposition as a self-classifying artifact field.
       // Each stage's own ratio brackets where the row's ratio lives
       // (see StageProbes' reading note).
-      val stageDecomp = graft.queries.StageProbes.probes.get(n).map {
+      val stageDecomp = StageProbes.probes.get(n).map {
         stages =>
           stages.map { case (label, build) =>
             def timeStage(dir: String): Double = {

@@ -1,10 +1,11 @@
-package graft.queries
+package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ColumnBridge
 import graft.operators.MinHashLsh
+import graft.queries.{CorpusExtras, DedupGates, LlmPipeline, MediaDedup}
 
 /** Stage decompositions for ScaleBench rows that have earned one (r18
   * judge directive #5): each entry names PREFIX sub-pipelines of the
@@ -140,13 +141,13 @@ object StageProbes {
         // quadratic into rep-count work
         "collapse" -> { (s: SparkSession, dir: String) =>
           graft.operators.DedupPipeline.collapseExact(
-            Round16.boilerDocs(s, dir), "doc_id", "text")
+            DedupGates.boilerDocs(s, dir), "doc_id", "text")
         },
         // + the collapsed corpus's (gram, df) table — gram hashing +
         // the one count shuffle (the q59 probe shape over THIS corpus)
         "gram_df" -> { (s: SparkSession, dir: String) =>
           val g = graft.operators.DedupPipeline.collapseExact(
-            Round16.boilerDocs(s, dir), "doc_id", "text")
+            DedupGates.boilerDocs(s, dir), "doc_id", "text")
             .select(col("doc_id").as("__id"),
               ColumnBridge.col(graft.functions.SortedGramHashes(
                 ColumnBridge.expr(col("text")), 3)).as("__g"))
@@ -157,10 +158,10 @@ object StageProbes {
         }),
       "q106_video_neardup" -> Seq(
         "plant_read" -> { (s: SparkSession, dir: String) =>
-          Round9.q106Media(s, dir)
+          MediaDedup.q106Media(s, dir)
         },
         "avghash_map" -> { (s: SparkSession, dir: String) =>
-          Round9.q106Media(s, dir).select(col("media_id"),
+          MediaDedup.q106Media(s, dir).select(col("media_id"),
             graft.operators.VideoDedup.avgHash(col("payload")).as("__h"))
         }))
 }

@@ -234,7 +234,7 @@ class StopGramSizingSpec extends SparkSuite {
   test("the budget-bind GATES (q118-q121) actually bind on the smallest " +
       "testdata sf: the 1 KiB budget can never silently take the " +
       "broadcast fast path") {
-    // Round17/Round18's gates argue bind-by-construction (64 entries
+    // The q118-q121 gates argue bind-by-construction (64 entries
     // vs thousands of df>=2 grams at every sf); this pins it where
     // it's cheapest to check. resolveTable's bounded collect runs at
     // DataFrame-CONSTRUCTION time, so building the four frames is
@@ -243,10 +243,10 @@ class StopGramSizingSpec extends SparkSuite {
     assume(new java.io.File(s"$dir/documents.parquet").exists,
       "driver testdata not present")
     val binds = capturingBinds {
-      graft.queries.Round17.q118JaccardBind(spark, dir)
-      graft.queries.Round17.q119ContainmentBind(spark, dir)
-      graft.queries.Round18.q120JaccardBindSkew(spark, dir)
-      graft.queries.Round18.q121ContainmentBindSkew(spark, dir)
+      graft.queries.DedupGates.q118JaccardBind(spark, dir)
+      graft.queries.DedupGates.q119ContainmentBind(spark, dir)
+      graft.queries.DedupGates.q120JaccardBindSkew(spark, dir)
+      graft.queries.DedupGates.q121ContainmentBindSkew(spark, dir)
       ()
     }
     assert(binds.length === 4,

@@ -7,6 +7,7 @@ Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB over the same parquet
 tables, and compares row count, column names/dtypes, and values (column-name-
 sorted, row-sorted hash) — mirroring CORRECTNESS_r{N}.json.
+An oracle key with no output directory (its query threw) counts as a FAIL.
 """
 import json, os, sys, math
 import duckdb
@@ -144,6 +145,13 @@ def main():
             rec["hash_match"] = True
             print(f"PASS {name}: {len(g)} rows")
             n_pass += 1
+    # an oracle whose query wrote nothing (it threw, or never ran) fails
+    for name in sorted(set(oracles) - set(results)):
+        results[name] = {"rows_match": False, "schema_match": False,
+                         "hash_match": False, "spark_rows": None,
+                         "oracle_rows": None, "err": "no spark output"}
+        print(f"FAIL {name}: no spark output")
+        n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     if json_out:
         with open(json_out, "w") as f:
