@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One oracle-checked query: its builder over an sf directory and the
-  * DuckDB SQL the driver hash-compares its result against. A `readBack`
+  * DuckDB SQL the oracle compare hash-checks its result against. A `readBack`
   * query's oracle reads the query's own output back from
   * `SparkEntry.oracleInputDir/<name>.parquet` and re-derives the
   * SQL-expressible part from the raw tables; [[Verify]] writes that
@@ -24,10 +24,12 @@ final case class Query(
 object SparkEntry {
 
   /** Fixed location Verify copies read-back results to, so their oracles
-    * can reference a stable absolute path — the driver chooses its own
-    * outDir, which the oracle SQL can't see. A constant, so the query
-    * modules that inline it never initialize this object. */
-  final val oracleInputDir = "/root/repo/target/oracle_inputs"
+    * can reference a stable absolute path — the caller of Verify chooses
+    * its own outDir, which the oracle SQL can't see. `ORACLE_INPUT_DIR`
+    * overrides it; by default it is `target/oracle_inputs` under the
+    * working directory (the repository root when run through sbt). */
+  val oracleInputDir: String = sys.env.getOrElse("ORACLE_INPUT_DIR",
+    new java.io.File("target/oracle_inputs").getAbsolutePath)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -27,7 +27,7 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         // read-back oracles reference this result at a fixed path the
-        // driver's DuckDB can see regardless of its outDir choice
+        // oracle's DuckDB can see regardless of the outDir chosen
         if (copies.contains(name))
           spark.read.parquet(s"$outDir/$name").coalesce(1)
             .write.mode("overwrite").parquet(s"$copyDir/$name.parquet")

@@ -202,7 +202,7 @@ object CorpusExtras {
     * a fully independent check that the right member of every cluster
     * survives. Output: the surviving docs (id, n_chars). Gate note:
     * the exhaustive all-pairs + closure oracle is DuckDB-expensive —
-    * compare runs at the driver's sf0.01 (green); at sf0.1 the engine
+    * compare runs at sf0.01 (green); at sf0.1 the engine
     * side is sanity-pinned by the survivor ratio (4756 of ~9.9 K aug
     * docs, matching sf0.01's 476 of ~990) — the q32 oracle class. */
   def q105KeepBestDedup(s: SparkSession, dir: String): DataFrame = {

@@ -33,7 +33,7 @@ object SqlSurface {
   /** q100: the [[graft.plans.RewriteExactDistinct]] optimizer rule
     * driven through the GATE, not just the spec — a plain
     * `count(DISTINCT user_id)` SQL query executed with the rewrite
-    * flag on, so the rows the driver hash-compares are produced by the
+    * flag on, so the rows the oracle compare checks are produced by the
     * bitmap plan (the plan flip itself is asserted in
     * GraftExtensionsSpec; here the rewritten plan must reproduce the
     * oracle's exact distinct counts). The flag is restored around the

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the query catalogue the driver reads through [[SparkEntry]]:
+/** Pins the query catalogue read through [[SparkEntry]]:
   * names, oracles and the read-back set. Builds no Spark session — the
   * registry only holds builders, so nothing here runs a query. */
 class SparkEntrySpec extends AnyFunSuite {
