@@ -25,11 +25,9 @@ object SparkEntry {
 
   /** Fixed location Verify copies read-back results to, so their oracles
     * can reference a stable absolute path — the caller of Verify chooses
-    * its own outDir, which the oracle SQL can't see. `ORACLE_INPUT_DIR`
-    * overrides it; by default it is `target/oracle_inputs` under the
-    * working directory (the repository root when run through sbt). */
-  val oracleInputDir: String = sys.env.getOrElse("ORACLE_INPUT_DIR",
-    new java.io.File("target/oracle_inputs").getAbsolutePath)
+    * its own outDir, which the oracle SQL can't see. A constant, so the
+    * query modules that inline it never initialize this object. */
+  final val oracleInputDir = "/root/repo/target/oracle_inputs"
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -30,6 +30,8 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("a read-back oracle reads its own copy; no other oracle reads one") {
+    // the oracle SQL embeds this directory, so its value is part of the catalogue
+    assert(SparkEntry.oracleInputDir === "/root/repo/target/oracle_inputs")
     for (q <- registry) {
       val own = s"${SparkEntry.oracleInputDir}/${q.name}.parquet"
       if (q.readBack) assert(q.oracleSql.contains(own), q.name)
