@@ -65,6 +65,12 @@ object Sessions {
       // SAME code path at every scale instead of a file-create storm
       // below the threshold. Results are writer-independent.
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      // `file:` without per-file `chmod`/`readlink` subprocesses, for both
+      // Hadoop APIs (graft.InProcessLocalFs). FileSystem.CACHE is JVM-wide,
+      // so the first local FileSystem built in a process keeps its class.
+      .config("spark.hadoop.fs.file.impl", classOf[InProcessLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[InProcessLocalFs].getName)
       .config("spark.ui.enabled", "false")
 }
 

@@ -95,7 +95,15 @@ object StatefulDedup {
     * on 256 commit cycles, while 8 partitions run the same gate in
     * 4.8 s. 8192 rows/partition/trigger puts the per-partition work an
     * order of magnitude above the commit cost while staying far below
-    * any memory bound (state rows are a key hash + marker). */
+    * any memory bound (state rows are a key hash + marker).
+    *
+    * That cycle cost included Hadoop forking `chmod` and `readlink` for
+    * each delta file (no `libhadoop`). Under [[graft.InProcessLocalFs]]
+    * a traced `sinkbench` `replay_dedup` run (seed 7, 4-core VM, 2 state
+    * partitions × 8192 rows per trigger) commits in ~3 ms per partition
+    * per trigger: `state.commit_ms` 172 ms over 27 triggers, against
+    * 1,693 ms over 18 (~47 ms a cycle) on the stock filesystem. The rule
+    * is not retuned to the cheaper cycle yet. */
   val RowsPerStatePartition = 8192L
 
   /** The sizing rule from the r9 measurement, as code: state partitions
