@@ -71,6 +71,19 @@ object Sessions {
       .config("spark.hadoop.fs.file.impl", classOf[InProcessLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[InProcessLocalFs].getName)
+      // One executor classloader per session, not one per streaming query.
+      // `start()` clones the session, the clone gets a new session UUID,
+      // and with artifact isolation on (the default) its tasks run under a
+      // fresh `ExecutorClassLoader`. The codegen cache is keyed on
+      // (context classloader, source), so every query recompiled
+      // byte-identical code in Janino, fetched missed class names from the
+      // driver over RPC, and ran its classes JIT-cold. On `replay_dedup`,
+      // where each drain is a new query, that was 9 compiles per drain;
+      // with isolation off it is 0 after a session's first drain, and a
+      // run loads 30 generated classes instead of 183
+      // (StreamCodegenReuseSpec). Isolation only separates jars and files
+      // added with `addArtifact` (Spark Connect); the engine adds none.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
 }
 

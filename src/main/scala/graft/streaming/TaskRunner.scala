@@ -132,7 +132,13 @@ object TaskRunner {
     * inside the `StreamExecution` CONSTRUCTOR, which runs synchronously
     * within `start()`, so first-batch planning reads the clone, never
     * the restored session conf (pinned by TaskRunnerSizingSpec's
-    * restore-before-await assertions). */
+    * restore-before-await assertions).
+    *
+    * The clone has its own session UUID. With artifact isolation off
+    * (`Sessions.builder`) its tasks still run under the session's one
+    * executor classloader and share its codegen cache, so a query after
+    * the first compiles no generated code that an earlier query of the
+    * same plan compiled (pinned by StreamCodegenReuseSpec). */
   def run(
       cfg: TaskConfig,
       source: DataFrame,
