@@ -8,6 +8,21 @@ package graft
   * StdoutOutput so sbt doesn't prefix it).
   */
 object Bench {
+
+  /** The flow task the ingest rows time, in the reference's task-config
+    * JSON shape: the fields of [[graft.sources.Generators.flowJson]] plus
+    * the `__kafka_*` provenance, hash-sharded on `ip_src`. */
+  private val FlowTask = graft.streaming.TaskConfig.fromJson(
+    """{"name": "flows", "topic": "flows", "parser": "json", "tableName": "flow_sink",
+      |"shardingKey": "ip_src", "shardingPolicy": "hash", "dims": [
+      |  {"name": "@timestamp", "type": "DateTime"}, {"name": "ip_src", "type": "String"},
+      |  {"name": "ip_dst", "type": "String"}, {"name": "ip_proto", "type": "String"},
+      |  {"name": "port_src", "type": "Int32"}, {"name": "port_dst", "type": "Int32"},
+      |  {"name": "bytes", "type": "Int64"}, {"name": "class", "type": "String"},
+      |  {"name": "__kafka_topic", "type": "String"},
+      |  {"name": "__kafka_partition", "type": "Int32"},
+      |  {"name": "__kafka_offset", "type": "Int64"}]}""".stripMargin)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -195,42 +210,30 @@ object Bench {
     // region matches the reference's consume→write measurement: the
     // generated flow JSON is materialized (persist + count) UNTIMED —
     // synthesis is the broker's job, not the sinker's — and the clock
-    // covers scan → typed parse (JsonTypedRow) → __kafka_* virtuals →
-    // SearchIP(src,dst) over a 131k-range broadcast geo table →
-    // ReplaceUnknown serviceMap lookup → shard routing → sink.
+    // covers the flow task as the engine runs it (TaskRunner.build):
+    // scan → typed parse with the observe() counters → __kafka_*
+    // virtuals → SearchIP(src,dst) over a 131k-range broadcast geo table
+    // → ReplaceUnknown serviceMap lookup → hash-shard repartition into 3
+    // writer shards → sink.
     val INGEST_ROWS = 2000000L
-    def ingestPipeline(input: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      import graft.schema.ColumnSpec
-      import graft.sources.{MessageParser, ParserConfig}
-      import graft.enrich.{ClassNormalize, IpEnrich, IpRange}
-      import org.apache.spark.sql.functions.col
-      val specs = Seq(
-        ColumnSpec("@timestamp", "DateTime"),
-        ColumnSpec("ip_src", "String"),
-        ColumnSpec("ip_dst", "String"),
-        ColumnSpec("ip_proto", "String"),
-        ColumnSpec("port_src", "Int32"),
-        ColumnSpec("port_dst", "Int32"),
-        ColumnSpec("bytes", "Int64"),
-        ColumnSpec("class", "String"),
-        ColumnSpec("__kafka_topic", "String"),
-        ColumnSpec("__kafka_partition", "Int32"),
-        ColumnSpec("__kafka_offset", "Int64"))
-      // qqwry-scale synthetic geo DB: 2^17 ranges tiling the IPv4 space
-      // (real qqwry.dat has ~500k), LAN/empty-area cases included
-      val ranges = (0 until (1 << 17)).map { k =>
-        val area =
-          if (k % 1024 == 0) "对方和您在同一内部网"
-          else if (k % 3 == 0) ""
-          else s"ISP-${k % 97}"
-        IpRange(k.toLong << 15, ((k.toLong + 1) << 15) - 1, s"国家${k % 4096}", area)
-      }
-      val parsed = input
-        .transform(MessageParser.project(specs, ParserConfig(format = "json")))
-      ClassNormalize.replaceUnknown(spark)(
-          IpEnrich.searchIp(parsed, ranges, objs = Seq("src", "dst")))
-        .withColumn("__shard",
-          graft.operators.Sharding.hashShard(col("ip_src"), 3))
+    // qqwry-scale synthetic geo DB: 2^17 ranges tiling the IPv4 space
+    // (real qqwry.dat has ~500k), LAN/empty-area cases included; built
+    // once, like a task's geo table at start-up
+    val ingestRanges = (0 until (1 << 17)).map { k =>
+      val area =
+        if (k % 1024 == 0) "对方和您在同一内部网"
+        else if (k % 3 == 0) ""
+        else s"ISP-${k % 97}"
+      graft.enrich.IpRange(
+        k.toLong << 15, ((k.toLong + 1) << 15) - 1, s"国家${k % 4096}", area)
+    }
+    // one timed pass: the flow task over `input`, written by `sink`
+    def ingestOnce(input: org.apache.spark.sql.DataFrame,
+        sink: graft.streaming.BatchSink, pass: Long): Double = {
+      val t0 = System.nanoTime()
+      sink.write(graft.streaming.TaskRunner.build(FlowTask,
+        graft.enrich.Enrich.handleMsg(spark, ingestRanges), numShards = 3)(input), pass)
+      (System.nanoTime() - t0) / 1e9
     }
 
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -286,82 +289,65 @@ object Bench {
     // one-off JVM stall turned a ~2 s pipeline into 29 s.
     val ingestInput = graft.sources.Generators.flowJson(spark, INGEST_ROWS).persist()
     ingestInput.count() // materialize outside the timed region
-    def ingestOnce(): Double = {
-      val t0 = System.nanoTime()
-      ingestPipeline(ingestInput).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    ingestOnce() // warm-up
-    val ingestSec = guardPasses("ingest_2m_jsonlog",
-      (1 to 2).map { _ => System.gc(); ingestOnce() },
-      () => { System.gc(); ingestOnce() }, ThroughputRatio).min
+    val noopSink: graft.streaming.BatchSink =
+      (batch, _) => batch.write.format("noop").mode("overwrite").save()
+    ingestOnce(ingestInput, noopSink, 0L) // warm-up
+    val ingestSec = guardPasses("ingest_2m_task_noop",
+      (1 to 2).map { p => System.gc(); ingestOnce(ingestInput, noopSink, p) },
+      () => { System.gc(); ingestOnce(ingestInput, noopSink, 3L) },
+      ThroughputRatio).min
     System.err.println(
       f"[bench] ingest: $INGEST_ROWS rows in $ingestSec%.2f s = ${INGEST_ROWS / ingestSec}%.0f rows/s")
 
-    // Ingest variant that PAYS A REAL WRITE: same pipeline, but the sink
-    // is the replay-idempotent parquet lake sink instead of noop — the
+    // Ingest variant that PAYS A REAL WRITE: same task, but the sink is
+    // the replay-idempotent parquet lake sink instead of noop — the
     // closest in-sandbox analog of the reference's ClickHouse INSERT cost
     // (columnar encode + flush to storage), which its 142 K rows/s
-    // baseline includes. The no-write row above is kept for cross-round
-    // continuity; this row is the apples-to-apples one.
-    val lakeDir = java.nio.file.Files.createTempDirectory("graft_ingest_lake").toString
-    def ingestParquetOnce(pass: Long): Double = {
-      val t0 = System.nanoTime()
-      new graft.streaming.IdempotentParquetSink(lakeDir)
-        .write(ingestPipeline(ingestInput), pass)
-      (System.nanoTime() - t0) / 1e9
-    }
-    ingestParquetOnce(0L) // warm-up
-    val ingestPqSec = guardPasses("ingest_2m_parquet_write",
-      (1 to 2).map { p => System.gc(); ingestParquetOnce(p.toLong) },
-      () => { System.gc(); ingestParquetOnce(3L) }, ThroughputRatio).min
+    // baseline includes.
+    val lakeSink = new graft.streaming.IdempotentParquetSink(
+      java.nio.file.Files.createTempDirectory("graft_ingest_lake").toString)
+    ingestOnce(ingestInput, lakeSink, 0L) // warm-up
+    val ingestPqSec = guardPasses("ingest_2m_task_parquet",
+      (1 to 2).map { p => System.gc(); ingestOnce(ingestInput, lakeSink, p) },
+      () => { System.gc(); ingestOnce(ingestInput, lakeSink, 3L) },
+      ThroughputRatio).min
     System.err.println(
       f"[bench] ingest+parquet: $INGEST_ROWS rows in $ingestPqSec%.2f s = ${INGEST_ROWS / ingestPqSec}%.0f rows/s")
     ingestInput.unpersist()
 
-    // Ingest variant through the REAL JDBC sink machinery (JdbcInsertTarget
-    // batched inserts over the executor-local ConnectionPool) into embedded
-    // Derby — a genuine transactional database write per batch, the same
-    // code path a ClickHouse/warehouse target would exercise. Smaller row
-    // count: a B-tree row-store pays per-row costs a columnar target
-    // doesn't, and the point is to time OUR sink plumbing, not Derby.
+    // Ingest variant through the streaming task's exactly-once JDBC sink
+    // (JdbcExactlyOnceSink: one replaceSlice per shard partition over the
+    // executor-local ConnectionPool) into embedded Derby — a genuine
+    // transactional database write per slice. Smaller row count: a
+    // B-tree row-store pays per-row costs a columnar target doesn't.
     System.setProperty("derby.system.home", "target/derby")
     val JDBC_ROWS = 200000L
     val jdbcUrl = "jdbc:derby:memory:graftBench;create=true"
     val jdbcProps = new java.util.Properties()
-    val jdbcCols = Seq("ip_src", "ip_dst", "port_src", "port_dst", "bytes",
-      "loc_src", "isp_src", "loc_dst", "isp_dst")
-    graft.streaming.ConnectionPool.withConnection(jdbcUrl, jdbcProps) { c =>
-      val st = c.createStatement()
-      try st.execute(
+    def jdbcExec(sql: String): Unit =
+      graft.streaming.ConnectionPool.withConnection(jdbcUrl, jdbcProps) { c =>
+        val st = c.createStatement()
+        try st.execute(sql) finally st.close()
+      }
+    try {
+      jdbcExec(
         "CREATE TABLE flow_sink (ip_src VARCHAR(48), ip_dst VARCHAR(48), " +
         "port_src INT, port_dst INT, bytes BIGINT, loc_src VARCHAR(128), " +
         "isp_src VARCHAR(128), loc_dst VARCHAR(128), isp_dst VARCHAR(128))")
-      catch { case _: java.sql.SQLException => () } finally st.close()
-    }
+      graft.streaming.JdbcExactlyOnceSink.ddlSuffix("flow_sink").foreach(jdbcExec)
+    } catch { case _: java.sql.SQLException => () } // already created
+    val jdbcSink = new graft.streaming.JdbcExactlyOnceSink(jdbcUrl, "flow_sink",
+      Seq("ip_src", "ip_dst", "port_src", "port_dst", "bytes",
+        "loc_src", "isp_src", "loc_dst", "isp_dst"))
     val jdbcInput = graft.sources.Generators.flowJson(spark, JDBC_ROWS).persist()
     jdbcInput.count()
-    val jdbcReady = ingestPipeline(jdbcInput)
-      .select(jdbcCols.head, jdbcCols.tail: _*)
-    def jdbcTruncate(): Unit =
-      graft.streaming.ConnectionPool.withConnection(jdbcUrl, jdbcProps) { c =>
-        val st = c.createStatement()
-        try st.execute("DELETE FROM flow_sink") finally st.close()
-      }
-    def ingestJdbcOnce(): Double = {
-      val t0 = System.nanoTime()
-      val cols = jdbcCols
-      jdbcReady.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        val target = new graft.streaming.JdbcInsertTarget(
-          jdbcUrl, "FLOW_SINK", cols, new java.util.Properties())
-        it.grouped(2000).foreach(chunk => target.insertBatch(chunk))
-      }
-      (System.nanoTime() - t0) / 1e9
+    def ingestJdbcOnce(pass: Long): Double = {
+      jdbcExec("DELETE FROM flow_sink"); System.gc()
+      ingestOnce(jdbcInput, jdbcSink, pass)
     }
-    ingestJdbcOnce() // warm-up
-    val ingestJdbcSec = guardPasses("ingest_200k_jdbc_derby",
-      (1 to 2).map { _ => jdbcTruncate(); System.gc(); ingestJdbcOnce() },
-      () => { jdbcTruncate(); System.gc(); ingestJdbcOnce() },
+    ingestJdbcOnce(0L) // warm-up
+    val ingestJdbcSec = guardPasses("ingest_200k_task_jdbc",
+      (1 to 2).map(p => ingestJdbcOnce(p.toLong)), () => ingestJdbcOnce(3L),
       ThroughputRatio).min
     jdbcInput.unpersist()
     graft.streaming.ConnectionPool.drain()
@@ -806,9 +792,9 @@ object Bench {
     // ingest is reported per-query AND as rows/s, but kept OUT of `total`
     // so cross-round query totals stay apples-to-apples.
     val results = queryResults ++ Seq(
-      "ingest_2m_jsonlog" -> ingestSec,
-      "ingest_2m_parquet_write" -> ingestPqSec,
-      "ingest_200k_jdbc_derby" -> ingestJdbcSec,
+      "ingest_2m_task_noop" -> ingestSec,
+      "ingest_2m_task_parquet" -> ingestPqSec,
+      "ingest_200k_task_jdbc" -> ingestJdbcSec,
       "stream_intake_500k" -> streamSec,
       "stream_neardup_30k_hot" -> nearHotSec,
       "stream_neardup_30k_uniform" -> nearUniSec,
@@ -840,11 +826,13 @@ object Bench {
     val protocol = "per query: untimed warm-up, then min of 2 timed passes, " +
       "leftover persisted-RDD release + System.gc() between; noop sink; " +
       "ingest timed consume->sink over " +
-      "pre-materialized input (generation untimed), parse+geoip(131k ranges," +
-      "src+dst)+serviceMap+shard stages, min of 2, excluded from total; " +
-      "write variants: same pipeline into idempotent parquet lake sink (2M) " +
-      "and JdbcInsertTarget batched inserts via ConnectionPool into embedded " +
-      "Derby (200k, table truncated between passes); stream_intake: 500k docs, " +
+      "pre-materialized input (generation untimed), the flow task as " +
+      "TaskRunner.build assembles it: parse+observed counters+geoip(131k " +
+      "ranges,src+dst)+serviceMap+3-way hash-shard repartition, min of 2, " +
+      "excluded from total; write variants: same task into idempotent " +
+      "parquet lake sink (2M) and the exactly-once JDBC sink " +
+      "(JdbcExactlyOnceSink) into embedded Derby (200k, table truncated " +
+      "between passes); stream_intake: 500k docs, " +
       "16 files, AvailableNow 2 files/trigger, quality gate + native " +
       "streaming-dedup first-seen gate (StreamingDeduplicateExec, " +
       "UnsafeRow state-store path, state partitions sized to " +
@@ -939,9 +927,9 @@ object Bench {
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val shortKey = Map(
-      "ingest_2m_jsonlog" -> "ingest_json",
-      "ingest_2m_parquet_write" -> "ingest_pq",
-      "ingest_200k_jdbc_derby" -> "ingest_jdbc",
+      "ingest_2m_task_noop" -> "ingest_json",
+      "ingest_2m_task_parquet" -> "ingest_pq",
+      "ingest_200k_task_jdbc" -> "ingest_jdbc",
       "stream_intake_500k" -> "stream",
       "stream_neardup_30k_hot" -> "neardup_hot",
       "stream_neardup_30k_uniform" -> "neardup_uni",

@@ -5,15 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.{Query, Tables}
 import graft.schema.{ColumnSpec, CType}
-import graft.sources.{MessageParser, ParserConfig}
+import graft.sources.ParserConfig
+import graft.streaming.{TaskConfig, TaskRunner}
 
 /** Oracle-checked exercises of the typed message-parsing stack (SURVEY §2.2):
   * JSON / CSV messages are rendered from the `events` parquet table, pushed
-  * through [[MessageParser.project]] with a ColumnSpec schema covering the
-  * coercion matrix (ints, floats, strings, datetimes, elastic datetimes,
-  * bools→1/0, u64 overflow→0, missing→default/null, arrays, `__kafka_*`
-  * virtual columns), and the DuckDB oracle recomputes the same values
-  * straight from the table.
+  * through the flow task's projection ([[TaskRunner.build]]) with a
+  * ColumnSpec schema covering the coercion matrix (ints, floats, strings,
+  * datetimes, elastic datetimes, bools→1/0, u64 overflow→0,
+  * missing→default/null, arrays, `__kafka_*` virtual columns), and the
+  * DuckDB oracle recomputes the same values straight from the table.
   *
   * The parse expression is a single-pass CodegenFallback over each message
   * (same plan position as `from_json`); at 100 TB the stage is
@@ -62,8 +63,8 @@ object Parsing {
       ColumnSpec("__kafka_topic", CType.CString, nullable = false, "__kafka_topic"),
       ColumnSpec("__kafka_partition", CType.CInt, nullable = false, "__kafka_partition"),
       ColumnSpec("__kafka_offset", CType.CInt, nullable = false, "__kafka_offset"))
-    messages
-      .transform(MessageParser.project(specs, cfg))
+    TaskRunner.build(TaskConfig("q13_json_parse", "events", cfg, "events", specs))(
+      messages)
   }
 
   /** q14: CSV typed parse with quoted cells, the `"null"` missing literal,
@@ -93,8 +94,8 @@ object Parsing {
       ColumnSpec("ts_parsed", CType.CDateTime, nullable = false, "ts"),
       ColumnSpec("maybe", CType.CString, nullable = true, "maybe"),
       ColumnSpec("arr", CType.CIntArray, nullable = false, "arr"))
-    messages
-      .transform(MessageParser.project(specs, csvCfg))
+    TaskRunner.build(TaskConfig("q14_csv_parse", "events", csvCfg, "events", specs))(
+        messages)
       .withColumn("arr_joined", array_join(col("arr"), "|"))
       .drop("arr")
   }

@@ -20,13 +20,14 @@ final case class ParserConfig(
     timeZone: String = "UTC")
 
 /** The `MetricToRow` stage (model/message.go:171-212): raw message bytes →
-  * typed columns per the target schema, plus `__kafka_*` virtual columns
-  * and optional Prometheus series-id/labels.
+  * typed columns per the target schema, plus optional Prometheus
+  * series-id/labels.
   *
-  * Shape: `df.transform(MessageParser.project(specs, cfg))` where `df` has
-  * (value: String, topic: String, partition: Int, offset: Long) — exactly
-  * the Kafka source columns, so the same stage serves batch parquet tests
-  * and `readStream.format("kafka")` unchanged.
+  * [[graft.streaming.TaskRunner.build]] assembles the stage over a frame
+  * of (value: String, topic: String, partition: Int, offset: Long) —
+  * exactly the Kafka source columns, so the same projection serves batch
+  * frames and `readStream.format("kafka")` unchanged — and fills the
+  * `__kafka_*` virtual columns from the last three.
   */
 object MessageParser {
 
@@ -43,27 +44,6 @@ object MessageParser {
   }
 
   def isVirtual(name: String): Boolean = name.startsWith("__kafka")
-
-  /** Full projection: parse, drop malformed rows (task/task.go:280-287 —
-    * counted then skipped), flatten typed fields, add virtual columns.
-    */
-  def project(specs: Seq[ColumnSpec], cfg: ParserConfig)(df: DataFrame): DataFrame = {
-    val withParsed = df
-      .withColumn("__parsed", parsed(col("value"), specs, cfg))
-      .filter(col("__parsed").isNotNull)
-    val cols = specs.map { s =>
-      if (isVirtual(s.name)) virtualColumn(s.name).cast(s.ctype.sparkType).as(s.name)
-      else col("__parsed").getField(s.name).as(s.name)
-    }
-    withParsed.select(cols: _*)
-  }
-
-  /** `__kafka_topic` / `__kafka_partition` / `__kafka_offset`
-    * (model/message.go:183-190, suffix-matched like the reference). */
-  private def virtualColumn(name: String): Column =
-    if (name.endsWith("_topic")) col("topic")
-    else if (name.endsWith("_partition")) col("partition")
-    else col("offset")
 
   /** Prometheus-mode series id + labels (model/message.go:176-211):
     * `__series_id = xxhash64_seed0(concat per non-empty string dim of

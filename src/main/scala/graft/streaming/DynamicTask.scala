@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 import graft.schema.{ColumnSpec, CType}
 import graft.sources.DetectType
@@ -76,18 +76,12 @@ object DynamicTask {
       ddl: DdlExecutor,
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery =
-    source.writeStream
-      .queryName(cfg.name)
-      .trigger(
-        if (availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime(cfg.flushInterval * 1000L))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    TaskRunner.start(cfg, source, checkpointDir, availableNow) {
+      (batch: DataFrame, batchId: Long) =>
         val r = evolve(cfg, batch, ddl)
         if (r.evolvedKeys.nonEmpty) throw new SchemaEvolved(r)
         sink.write(TaskRunner.build(cfg)(batch), batchId)
-      }
-      .start()
+    }
 
   /** Walk a terminated query's cause chain for the [[SchemaEvolved]]
     * signal (Spark wraps foreachBatch user exceptions). */

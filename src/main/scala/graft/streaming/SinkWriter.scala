@@ -16,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   * rotates replicas — a failing slice fails the Spark task, and Spark's
   * task retry replaces the slice. Only specs call the two writers today,
   * so [[SinkStats]]' `FlushMsgsErrorTotal` and `ClickHouseReconnectTotal`
-  * stay 0 on a streaming task.
+  * stay 0 on a streaming task. [[JdbcInsertTarget]]'s `insertBatch` and
+  * `insertRow` are reached only through [[QuarantineWriter]], so only
+  * specs reach them too.
   */
 trait InsertTarget {
   /** Insert a whole batch transactionally; throw on failure. */

@@ -44,9 +44,12 @@ object TaskRunner {
         col("topic"), col("partition"), col("offset"))
   }
 
-  /** Batch/stream-agnostic transform: parse + project with observed
-    * counters (ConsumeMsgsTotal / ParseMsgsErrorTotal — the reference's
-    * statistics.go names), then enrichment, then sharding. */
+  /** The one projection of every flow task, batch or stream: parse +
+    * project with observed counters (ConsumeMsgsTotal /
+    * ParseMsgsErrorTotal — the reference's statistics.go names; malformed
+    * rows are counted, then skipped, task/task.go:280-287), then
+    * enrichment, then sharding. `__kafka_*` virtuals take the source's
+    * topic/partition/offset (model/message.go:183-190, suffix-matched). */
   def build(
       cfg: TaskConfig,
       enrich: DataFrame => DataFrame = identity,
@@ -111,7 +114,8 @@ object TaskRunner {
 
   /** Start the streaming query: micro-batch per flush interval, sink via
     * foreachBatch, offsets checkpointed. `availableNow = true` drains the
-    * source and stops (test/backfill mode).
+    * source and stops (test/backfill mode). A dynamic-schema config is
+    * refused: its new keys need [[DynamicTask.runDynamic]].
     *
     * `dedupKey` interposes the cross-batch first-seen gate
     * ([[StatefulDedup.firstSeen]]) between enrichment and sharding —
@@ -148,23 +152,36 @@ object TaskRunner {
       numShards: Int = 1,
       availableNow: Boolean = false,
       dedupKey: Option[String] = None): StreamingQuery = {
+    require(!cfg.dynamicSchema, s"task ${cfg.name} has a dynamic schema, " +
+      "which TaskRunner.run would keep fixed: use DynamicTask.runDynamic")
     val core = build(cfg, enrich, numShards = 1)(source)
     val gated = dedupKey.fold(core)(StatefulDedup.firstSeen(core, _))
     val transformed = applyShard(cfg, numShards)(gated)
-    def start(): StreamingQuery = transformed.writeStream
+    def go(): StreamingQuery =
+      start(cfg, transformed, checkpointDir, availableNow)(sink.write)
+    if (dedupKey.isEmpty) go()
+    else StatefulDedup.withStatePartitions(source.sparkSession,
+      StatefulDedup.statePartitionsFor(cfg.bufferSize.toLong))(go())
+  }
+
+  /** The one starter of [[run]] and [[DynamicTask.runStreaming]]: the
+    * query is named after the task, `flushInterval` is the trigger
+    * (`availableNow` drains instead), and each micro-batch goes to `write`. */
+  private[streaming] def start(
+      cfg: TaskConfig,
+      frame: DataFrame,
+      checkpointDir: String,
+      availableNow: Boolean)(write: (DataFrame, Long) => Unit): StreamingQuery =
+    frame.writeStream
       .queryName(cfg.name)
       .trigger(
         if (availableNow) Trigger.AvailableNow()
         else Trigger.ProcessingTime(cfg.flushInterval * 1000L))
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink.write(batch, batchId)
+        write(batch, batchId)
       }
       .start()
-    if (dedupKey.isEmpty) start()
-    else StatefulDedup.withStatePartitions(source.sparkSession,
-      StatefulDedup.statePartitionsFor(cfg.bufferSize.toLong))(start())
-  }
 }
 
 /** Collects the observed per-batch metrics (statistics.go counter names)
