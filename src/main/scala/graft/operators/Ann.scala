@@ -159,20 +159,10 @@ object Ann {
       .select(col("__id"), explode(array(bands: _*)).as("__bb"))
       .select(col("__id"), col("__bb.band").as("__band"),
         col("__bb.bucket").as("__bucket"))
-    val cands = MinHashLsh.candidatePairs(buckets)
-    val a = corpus.select(col(idCol).as("id_a"), toDoubleArray(col(vecCol)).as("__va"))
-    val b = corpus.select(col(idCol).as("id_b"), toDoubleArray(col(vecCol)).as("__vb"))
-    val nPart = corpus.sparkSession.sessionState.conf.numShufflePartitions
-    // candidate respread before the vector joins + exact-cosine verify,
-    // same rationale as MinHashLsh/JaccardJoin.nearDupPairs: AQE
-    // coalesces the 16-byte pair rows to one partition and the verify
-    // (a per-pair fused cosine over full vectors) would run serial
-    cands
-      .repartition(nPart)
-      .join(a, "id_a").join(b, "id_b")
-      .withColumn("cos", round(cosine(col("__va"), col("__vb")), 6))
+    FilterVerify.verify(MinHashLsh.candidatePairs(buckets), corpus, idCol,
+      vecCol, "cos")((a, b) =>
+      round(cosine(toDoubleArray(a), toDoubleArray(b)), 6))
       .filter(col("cos") >= minCos)
-      .select("id_a", "id_b", "cos")
   }
 
   /** Top-`nProbe` nearest-centroid indices — the IVF coarse quantizer
@@ -204,7 +194,7 @@ object Ann {
           Seq(ColumnBridge.expr(col(idCol))), seed)).as("__h"))
       .orderBy(col("__h"))
       .limit(sampleN))
-    // localCheckpointWide, not cache (r20): the cached TakeOrdered
+    // localCheckpointWide, not cache: the cached TakeOrdered
     // sample materialized as ONE partition, so every Lloyd iteration's
     // assign+mean job ran single-task (q47 stage profile: two ~0.5 s
     // one-task stages on a 3.7 s row; the sf1 probe pegged

@@ -31,10 +31,8 @@ import graft.functions.ColumnBridge
   *  4. The only sound size filter is one-directional: ∩ ≤ |B| forces
   *     |B| ≥ t·|A| (relaxed by 1e-9 so double rounding only ADMITS).
   *     Applied inside the bucket join; candidates then distinct.
-  *  5. Candidates re-spread (pinned round-robin count — the AQE
-  *     small-bytes collapse documented in [[JaccardJoin]]), text joined
-  *     for candidates only, verified by the string-gram-exact
-  *     [[graft.functions.ShingleContainment]].
+  *  5. Text joined for candidates only, verified by the string-gram-exact
+  *     [[graft.functions.ShingleContainment]] ([[FilterVerify.verify]]).
   */
 object ContainmentJoin {
 
@@ -44,12 +42,10 @@ object ContainmentJoin {
     * `maxStopGrams` defaults to [[StopGrams.Auto]]: the stop-gram
     * table covers every df≥2 gram up to `stopGramBudgetBytes` of
     * driver memory, so probe-prefix candidate volume stays
-    * data-proportional with no manual dial (r15 q59 decomposition:
-    * the fixed 65,536 cap was the sole source of candidate
-    * super-linearity). Past the budget the Auto path switches to the
-    * join-based exact frequency order ([[StopGrams.joinPrefix]], r16
-    * judge directive #2 — lossless, candidates stay ≈ data ratio);
-    * only explicit caps keep the warn-and-degrade meaning. */
+    * data-proportional with no manual dial. Past the budget the Auto
+    * path switches to the join-based exact frequency order
+    * ([[StopGrams.joinPrefix]], lossless); only explicit caps warn and
+    * degrade. */
   def containedPairs(
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 3, minContainment: Double = 0.9,
@@ -58,37 +54,20 @@ object ContainmentJoin {
     require(minContainment >= 0.01 && minContainment <= 1.0,
       s"minContainment must be in [0.01, 1.0], got $minContainment")
     val tRelaxed = minContainment - 1e-9
-    val grams = ColumnBridge.col(graft.functions.SortedGramHashes(
-      ColumnBridge.expr(col(textCol)), k))
-    val g = docs.select(col(idCol).as("__id"), grams.as("__g"))
-    // resolveTable persists the (gram, df) table across the capped
-    // collect and the rare all-hot recount: 16-byte rows (far narrower
-    // than the corpus), so caching it costs little on the common path
-    // and the recount never re-evaluates the gram expression end to
-    // end (r14 ADVICE — the unpinned recount was a hidden full-corpus
-    // hashing job triggered exactly on the heavily-skewed inputs where
-    // that pass is most expensive)
-    val dfTable = g
-      .select(explode(when(col("__g").isNotNull, col("__g"))).as("__gram"))
-      .groupBy(col("__gram")).agg(count(lit(1)).as("__df"))
-      .filter(col("__df") >= 2)
-    // bounded collect + bind-vs-warn decision: ONE shared
-    // implementation, [[StopGrams.resolveTable]]. The census lambda is
-    // the hot-bucket census (r12 judge directive #3): this path's
-    // buckets are join-implicit (probe prefix × full index per gram,
-    // never collected as arrays), but the stop-gram collect ALREADY
-    // holds every shared gram's index-side population in descending
-    // order — feed its head through the warning sink, zero extra jobs
-    // on the common path. When the capped collect is ENTIRELY hot
-    // (hot.length == bound), the true threshold-passing count is
-    // unknowable from it, so recover it with one count over the
-    // still-cached (gram, df) table — recordCensus's contract is the
-    // TRUE hits figure, and that corner is exactly the heavily-skewed
-    // corpus the census exists for (r13 ADVICE; same rare-hot-path
-    // trade as logTopBuckets).
-    val (stopRows, dfForJoin) = StopGrams.resolveTable(
-      "ContainmentJoin.containedPairs", dfTable, maxStopGrams,
-      stopGramBudgetBytes) { (rows, bound, cached) =>
+    val tag = "ContainmentJoin.containedPairs"
+    val g = StopGrams.gramSets(docs, idCol, textCol, k)
+    // The hot-bucket census: this path's buckets are join-implicit
+    // (probe prefix × full index per gram, never collected as arrays),
+    // but the stop-gram collect already holds every shared gram's
+    // index-side population in descending order, so its head feeds the
+    // warning sink with no extra job on the common path. When the
+    // capped collect is ENTIRELY hot (hot.length == bound), the true
+    // threshold-passing count is unknowable from it and one count over
+    // the still-cached (gram, df) table recovers it: recordCensus takes
+    // the TRUE hits figure, and that corner is exactly the heavily
+    // skewed corpus the census exists for.
+    val probe = StopGrams.prefix(tag, g, tRelaxed, maxStopGrams,
+        stopGramBudgetBytes) { (rows, bound, cached) =>
       val hot = rows.takeWhile(
         _.getLong(1) >= graft.functions.SkewWarn.threshold)
       val hotTotal =
@@ -98,52 +77,23 @@ object ContainmentJoin {
             .count()
         else hot.length.toLong
       hot.take(5).reverseIterator.foreach(r =>
-        graft.functions.SkewWarn.recordCensus(
-          "ContainmentJoin.containedPairs", r.getLong(1), hotTotal))
-    }
-    val probe = dfForJoin match {
-      case Some(dft) =>
-        // distributed exact-frequency prefix — no driver table (the
-        // containment prefix length formula is the same n−ceil(t·n)+1)
-        StopGrams.joinPrefix(g, dft, tRelaxed)
-          .select(col("__id").as("id_a"), col("__n").as("__na"),
-            col("__gram"))
-      case None =>
-        val byKey =
-          stopRows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        // broadcast, not expression-embedded: ships once per executor
-        // (see JaccardJoin — same r16 note)
-        val stopBc = graft.functions.RarestPrefix.broadcastTable(
-          docs.sparkSession, byKey)
-        val prefix = ColumnBridge.col(graft.functions.RarestPrefix(
-          ColumnBridge.expr(col("__g")), tRelaxed, stopBc))
-        g.select(
-          col("__id").as("id_a"), size(col("__g")).cast("long").as("__na"),
-          explode(when(col("__g").isNotNull, prefix)).as("__gram"))
-    }
-    val index = g.select(
-      col("__id").as("id_b"), size(col("__g")).cast("long").as("__nb"),
-      explode(when(col("__g").isNotNull, col("__g"))).as("__gram"))
+        graft.functions.SkewWarn.recordCensus(tag, r.getLong(1), hotTotal))
+    }.select(col("__id").as("id_a"), col("__n").as("__na"), col("__gram"))
+    val index = StopGrams.gramRows(g, col("__g"))
+      .select(col("__id").as("id_b"), col("__n").as("__nb"), col("__gram"))
     val cands = probe.join(index, "__gram")
       .filter(col("id_a") =!= col("id_b") &&
         col("__nb").cast("double") >= col("__na") * tRelaxed)
       .select("id_a", "id_b")
       .distinct()
-    val rawA = docs.select(col(idCol).as("id_a"), col(textCol).as("__t_a"))
-    val rawB = docs.select(col(idCol).as("id_b"), col(textCol).as("__t_b"))
-    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
-    cands
-      .repartition(nPart)
-      .join(rawA, "id_a").join(rawB, "id_b")
-      .select(col("id_a"), col("id_b"),
-        ColumnBridge.col(graft.functions.ShingleContainment(
-          ColumnBridge.expr(col("__t_a")), ColumnBridge.expr(col("__t_b")),
-          k)).as("containment"))
+    FilterVerify.verify(cands, docs, idCol, textCol, "containment")(
+      (a, b) => ColumnBridge.col(graft.functions.ShingleContainment(
+        ColumnBridge.expr(a), ColumnBridge.expr(b), k)))
       .filter(col("containment") >= minContainment)
   }
 
-  /** [[containedPairs]] over the exact-collapse composition (r15 judge
-    * directive #2): identical bodies (lower/trim fingerprint, the
+  /** [[containedPairs]] over the exact-collapse composition: identical
+    * bodies (lower/trim fingerprint, the
     * [[DedupPipeline]] normalization) collapse to their min-id
     * representative BEFORE the gram join, and pairs are emitted over
     * representatives only.
@@ -163,7 +113,7 @@ object ContainmentJoin {
     * near/containment stage sees each distinct body once, every
     * identical-text class probes the index exactly once, and both the
     * candidate volume AND the output return to data-proportional.
-    * Measured r16 (sf0.1 → sf1 at 10× data): collapsed cohort-probe
+    * Measured sf0.1 → sf1 (10× data): collapsed cohort-probe
     * candidates grew 9.97× where the raw path grew 100.1× (PLANS.md
     * "Skew-adversary decomposition"); the exhaustive-oracle gate is
     * q116.

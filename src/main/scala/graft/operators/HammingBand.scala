@@ -3,18 +3,19 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ColumnBridge
-
 /** Shared Hamming-band blocking over 64-bit fingerprints — the one
   * join shape behind SimHash text near-dup (q24), perceptual image
-  * near-dup ([[ImageDedup]], q102) and audio energy-hash near-dup
-  * ([[AudioDedup]], q104): explode each signature into `bands` slices,
-  * bucket on (band index, slice bits), and verify the EXACT Hamming
-  * distance in-bucket with the lazy [[graft.functions.HammingPairs]]
-  * generator. For `maxHamming < bands` the result is EXACT by
-  * pigeonhole: a pair within distance h < bands has at least one
-  * untouched slice, so it meets in that band's bucket; HammingPairs
-  * rejects everything farther, so nothing is invented either.
+  * near-dup ([[ImageDedup]], q102), audio energy-hash near-dup
+  * ([[AudioDedup]], q104) and video near-dup ([[VideoDedup]]): explode
+  * each signature into `bands` slices, bucket on (band index, slice
+  * bits), and verify the EXACT Hamming distance in-bucket with the lazy
+  * [[graft.functions.HammingPairs]] generator under
+  * [[FilterVerify.expandBuckets]]. For `maxHamming < bands` the result
+  * is EXACT by pigeonhole: a pair within distance h < bands has at least
+  * one untouched slice, so it meets in that band's bucket; HammingPairs
+  * rejects everything farther, so nothing is invented either. q24 runs
+  * the same blocking with fewer bands than its distance bound
+  * ([[bandPairs]]), so its recall is pinned by NearDupSpec instead.
   *
   * Scale shape: one shuffle of (band, key, id, sig) rows — 8-byte
   * signatures, never payloads. Bucket population is ~N/2^(64/bands)
@@ -26,8 +27,7 @@ object HammingBand {
   /** Fail loudly on a non-integral id column: a silent long-cast of
     * string ids would null them all and collapse every member to id 0
     * inside a pair generator. Shared by [[pairs]] and
-    * [[VideoDedup.orderedNearDupPairs]] (r10 ADVICE: the sibling had
-    * the cast without the check). */
+    * [[VideoDedup.orderedNearDupPairs]], which casts the same way. */
   private[operators] def requireIntegralId(
       df: DataFrame, idCol: String): Unit =
     df.schema(idCol).dataType match {
@@ -45,9 +45,17 @@ object HammingBand {
   def pairs(
       df: DataFrame, idCol: String, sig: Column,
       maxHamming: Int, bands: Int): DataFrame = {
-    require(bands >= 1 && 64 % bands == 0, s"bands must divide 64: $bands")
     require(maxHamming >= 0 && maxHamming < bands,
       s"exactness needs maxHamming < bands, got $maxHamming/$bands")
+    bandPairs(df, idCol, sig, maxHamming, bands)
+  }
+
+  /** [[pairs]] without the pigeonhole bound: with `maxHamming ≥ bands` a
+    * pair within the distance that differs in every band is missed. */
+  private[graft] def bandPairs(
+      df: DataFrame, idCol: String, sig: Column,
+      maxHamming: Int, bands: Int): DataFrame = {
+    require(bands >= 1 && 64 % bands == 0, s"bands must divide 64: $bands")
     requireIntegralId(df, idCol)
     val bandBits = 64 / bands
     val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
@@ -64,15 +72,8 @@ object HammingBand {
     }
     val bucketed = sigs.select(col("__id"), col("__sig"),
       explode(when(col("__sig").isNotNull, array(bandCols: _*))).as("__bb"))
-    val pairGen = ColumnBridge.col(graft.functions.HammingPairs(
-      ColumnBridge.expr(col("__members")), maxHamming = maxHamming))
-    bucketed
-      .groupBy(col("__bb"))
-      .agg(collect_list(struct(col("__id"), col("__sig"))).as("__members"))
-      // the > 1 filter doubles as the hot-bucket probe (SkewWarn)
-      .filter(SkewTools.monitoredSize(size(col("__members")),
-        "HammingBand.pairs") > 1)
-      .select(pairGen.as(Seq("id_a", "id_b", "hamming")))
-      .dropDuplicates("id_a", "id_b")
+    FilterVerify.expandBuckets(bucketed, Seq(col("__bb")),
+      struct(col("__id"), col("__sig")), "HammingBand.pairs")(
+      graft.functions.HammingPairs(_, maxHamming = maxHamming))
   }
 }

@@ -62,27 +62,17 @@ object MinHashLsh {
 
   /** Candidate id pairs (a < b) sharing at least one band bucket: ONE
     * shuffle of (band, bucket, id) rows, then in-bucket pair expansion
-    * ([[graft.functions.SortedPairs]]). A self-join would shuffle the
+    * ([[graft.functions.SortedPairs]] under
+    * [[FilterVerify.expandBuckets]]). A self-join would shuffle the
     * same rows AND execute the whole shingle→signature pipeline twice —
     * this groups once and never recomputes. Pathological mega-buckets
     * (thousands of docs sharing a band slice) are giant near-dup
     * *clusters*; their quadratic pair set is inherent to a pairs output,
     * and the scale answer is cluster-level dedup (first-seen per bucket,
     * q12 shape) rather than pair enumeration. */
-  def candidatePairs(buckets: DataFrame): DataFrame = {
-    val pairs = ColumnBridge.col(graft.functions.SortedPairs(
-      ColumnBridge.expr(col("__ids"))))
-    buckets
-      .groupBy(col("__band"), col("__bucket"))
-      .agg(collect_list(col("__id")).as("__ids"))
-      // the > 1 filter doubles as the hot-bucket probe (SkewWarn)
-      .filter(SkewTools.monitoredSize(size(col("__ids")),
-        "MinHashLsh.candidatePairs") > 1)
-      // SortedPairs is a lazy Generator: selected directly (no explode),
-      // a mega-bucket's pair set streams instead of materializing
-      .select(pairs.as(Seq("id_a", "id_b")))
-      .distinct()
-  }
+  def candidatePairs(buckets: DataFrame): DataFrame =
+    FilterVerify.expandBuckets(buckets, Seq(col("__band"), col("__bucket")),
+      col("__id"), "MinHashLsh.candidatePairs")(graft.functions.SortedPairs(_))
 
   /** Exact k-shingle Jaccard of two text columns in one fused native
     * pass ([[graft.functions.ShingleJaccard]]) — the candidate-verify
@@ -111,23 +101,8 @@ object MinHashLsh {
       ColumnBridge.expr(col(textCol)), shingleK, numHashes))
     val cands = candidatePairs(
       bandBuckets(docs, col(idCol), sig, numHashes, bands))
-    val rawA = docs.select(col(idCol).as("id_a"), col(textCol).as("__t_a"))
-    val rawB = docs.select(col(idCol).as("id_b"), col(textCol).as("__t_b"))
-    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
-    // Round-robin REPARTITION_BY_NUM before the verify joins — the same
-    // respread JaccardJoin.nearDupPairs carries (r20: this path was
-    // missing it): the distinct's exchange output is 16-byte pair rows,
-    // which AQE coalesces to ONE partition, serializing the per-pair
-    // exact-Jaccard verify (q38 stage profile: the ClusterDedup pair
-    // checkpoint's verify stage ran 1 task, 0.56 s of a ~2 s row). A
-    // hash repartition on the pair ids would be elided as a no-op
-    // against the distinct's partitioning, so it must be round-robin
-    // with a pinned count.
-    cands
-      .repartition(nPart)
-      .join(rawA, "id_a").join(rawB, "id_b")
-      .select(col("id_a"), col("id_b"),
-        shingleJaccard(col("__t_a"), col("__t_b"), shingleK).as("jaccard"))
+    FilterVerify.verify(cands, docs, idCol, textCol, "jaccard")(
+      shingleJaccard(_, _, shingleK))
       .filter(col("jaccard") >= minJaccard)
   }
 }

@@ -1,43 +1,40 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Corpus-proportional sizing for the stop-gram tables that steer the
-  * rare-first prefix order in [[JaccardJoin]] and [[ContainmentJoin]]
-  * (r15 judge directive #1).
+import graft.functions.ColumnBridge
+
+/** The rare-first gram prefix of the gram joins ([[JaccardJoin]],
+  * [[ContainmentJoin]]), and the sizing of the stop-gram table that
+  * orders it.
   *
-  * Why a sizing rule and not a fixed cap: the r15 q59 stage
-  * decomposition (PLANS.md "q59 stage decomposition") proved the fixed
-  * 65,536-entry cap was the SOLE source of candidate super-linearity —
-  * at sf1 the corpus holds 272 K df≥2 grams, grams past the cap fall
-  * back to hash order, prefixes steer less rarely, and candidates ran
-  * 15.5× on 10× data; raising the cap to cover the table restored
-  * exact linearity (−35% shuffle volume). A fixed cap's covered share
-  * trends to ZERO as the corpus grows, so at 100 TB the blow-up grows
-  * without bound. The honest rule: cover EVERY df≥2 gram (a df-1 gram
-  * cannot skew a bucket, so full df≥2 coverage makes the prefix order
-  * exactly the PPJoin frequency order and candidate volume
-  * data-proportional by the r15 measurement), bounded only by an
-  * explicit driver-memory budget — and when the budget binds, fall
-  * back to the no-silent-caps warning with the uncovered count and the
-  * dial, never silently.
+  * Why a sizing rule and not a fixed cap: a fixed 65,536-entry cap was
+  * the sole source of candidate super-linearity in q59. At sf1 the
+  * corpus holds 272 K df≥2 grams; grams past the cap fall back to hash
+  * order, prefixes steer less rarely, and candidates grew 15.5× on 10×
+  * data, while covering the whole table restored linear growth (−35%
+  * shuffle volume; PLANS.md "q59 stage decomposition"). A fixed cap's
+  * covered share trends to zero as the corpus grows. The rule instead
+  * covers EVERY df≥2 gram (a df-1 gram cannot skew a bucket, so full
+  * df≥2 coverage makes the prefix order exactly the PPJoin frequency
+  * order), bounded only by an explicit driver-memory budget; past the
+  * budget the Auto path switches to [[joinPrefix]], and a manual cap
+  * warns with the uncovered count, never silently.
   *
-  * Memory accounting: a table entry is two longs — 16 bytes in the
-  * primitive (key, df) arrays that ride the task binary via
-  * [[graft.functions.RarestPrefix]] (the task binary is
-  * torrent-broadcast once per stage, not per task). The default
-  * 64 MiB budget covers 4.19 M df≥2 grams — 15× the measured sf1
-  * table, and a bound a driver with a 100 TB corpus manifest can
-  * afford; deployments with more driver headroom raise
+  * Memory accounting: a table entry is two longs, 16 bytes in the
+  * primitive (key, df) arrays that [[graft.functions.RarestPrefix
+  * .broadcastTable]] broadcasts once per call, so they ship once per
+  * executor. The default 64 MiB budget covers 4.19 M df≥2 grams, 15×
+  * the measured sf1 table; a driver with more headroom raises
   * `stopGramBudgetBytes` at the operator call.
   */
 object StopGrams {
 
   /** Sentinel for `maxStopGrams`: size the table from the measured
-    * df≥2 gram count under the byte budget. Explicit values ≥ 0 keep
-    * their r15 meaning (0 = empty table = pure hash order — the
-    * losslessness spec's dial). */
+    * df≥2 gram count under the byte budget. An explicit value ≥ 0 is a
+    * manual cap (0 = empty table = pure hash order, the losslessness
+    * spec's dial). */
   val Auto: Int = -1
 
   /** Bytes per collected table entry: (gram hash, df) as two longs in
@@ -77,7 +74,7 @@ object StopGrams {
     * the bound proves the table is complete (no count job needed —
     * the common path), while a full result means possible truncation
     * and the true total is recovered with one count over the cached
-    * 16-byte table (the rare path — exactly r15's cap-hit shape). */
+    * 16-byte table (the rare path). */
   def collectBound(maxStopGrams: Int, budgetBytes: Long): Int =
     if (maxStopGrams >= 0) maxStopGrams
     else capFor(Long.MaxValue, budgetBytes)
@@ -90,7 +87,7 @@ object StopGrams {
   /** Swappable sink for the BIND note — fires when the Auto path's
     * df≥2 table outgrows the driver budget and the operator switches
     * to the join-based exact frequency order ([[joinPrefix]]) instead
-    * of degrading past the cap (r16 judge directive #2). Spec-capture
+    * of degrading past the cap. Spec-capture
     * discipline like [[warnSink]]; info, not a warning — the fallback
     * is lossless AND keeps candidates data-proportional, it just pays
     * distributed shuffles instead of a driver broadcast. */
@@ -103,44 +100,64 @@ object StopGrams {
           "join + per-doc rank; no driver table, candidates stay " +
           "data-proportional)")
 
-  /** The bounded stop-table collect + bind decision, shared by
-    * [[JaccardJoin]] and [[ContainmentJoin]] (ONE implementation so
-    * the bind rule cannot diverge — r17 review). `dfTable` is the
-    * operator's (__gram, __df) df≥2 frame; it is persisted for the
-    * duration of this call (collect + possible count + census all hit
-    * the cache) and unpersisted before returning.
+  /** Per doc, the sorted distinct k-word gram-hash set in one fused
+    * pass ([[graft.functions.SortedGramHashes]]): (__id, __g), 8-byte
+    * hashes, never gram strings. */
+  private[operators] def gramSets(
+      docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
+    docs.select(col(idCol).as("__id"), ColumnBridge.col(
+      graft.functions.SortedGramHashes(ColumnBridge.expr(col(textCol)), k))
+      .as("__g"))
+
+  /** (__id, __n, __gram) rows of [[gramSets]] output `g`: one per
+    * element of `grams` (an array over `__g`), __n the doc's set size.
+    * `__g` is multi-referenced and non-cheap, so it stays materialized
+    * in its own projection; the explode is null-guarded instead of
+    * filtered, because a filter on the gram expression would be pushed
+    * below that projection and evaluate the fused pass twice (see
+    * [[MinHashLsh.bandBuckets]]). */
+  private[operators] def gramRows(g: DataFrame, grams: Column): DataFrame =
+    g.select(col("__id"), size(col("__g")).cast("long").as("__n"),
+      explode(when(col("__g").isNotNull, grams)).as("__gram"))
+
+  /** The rare-first prefix rows (__id, __n, __gram) of [[gramSets]]
+    * output `g` under threshold `tRelaxed`: each doc's first
+    * `n − ceil(t·n) + 1` grams, ordered by ascending corpus frequency.
+    * The one prefix step of [[JaccardJoin]] and [[ContainmentJoin]].
     *
-    * ONE job on the common path: the collect is bounded by the budget
-    * ceiling (auto) or the manual cap; a result SHORTER than the
-    * bound proves full df≥2 coverage with no count job. Only a
-    * bound-filling result can be truncated — then one count over the
-    * cached 16-byte table recovers the true total. Auto + truncation
-    * = the BIND: [[bindSink]] fires and the pinned (localCheckpointed)
-    * table is returned for [[joinPrefix]] — the checkpoint is one job
-    * over the cached rows, and at warehouse scale it is the df-table
-    * write; manual caps keep their r15 warn-and-degrade meaning
-    * ([[warnSink]]; 0 = empty table = pure hash order, the
-    * losslessness dial). `census` runs while the table is still
-    * cached (ContainmentJoin's hot-bucket census; JaccardJoin passes
-    * none).
-    *
-    * Returns (collected stop rows, Some(pinned df table) iff the
-    * Auto budget bound — the caller switches to [[joinPrefix]]). */
-  def resolveTable(
-      tag: String, dfTable: DataFrame, maxStopGrams: Int,
+    * The df≥2 (gram, df) table is persisted for the duration of this
+    * call, so the collect, a possible count and the census never
+    * re-run the gram pass (16-byte rows, far narrower than the corpus).
+    * ONE job on the common path: the collect is bounded by
+    * [[collectBound]], and a result shorter than the bound proves full
+    * df≥2 coverage with no count job. Only a bound-filling result can be
+    * truncated; then one count over the cached 16-byte table recovers
+    * the true total. Below the bound the table is broadcast once and the
+    * prefix is a pure map ([[graft.functions.RarestPrefix]]). Auto plus
+    * truncation is the BIND: [[bindSink]] fires and the prefix comes
+    * from [[joinPrefix]] over the localCheckpointed table. A manual cap
+    * keeps its warn-and-degrade meaning ([[warnSink]]; 0 = empty table =
+    * pure hash order, the losslessness dial). `census` runs while the
+    * table is still cached, with (collected rows, bound, cached table):
+    * ContainmentJoin's hot-bucket census. */
+  private[operators] def prefix(
+      tag: String, g: DataFrame, tRelaxed: Double, maxStopGrams: Int,
       budgetBytes: Long)(
-      census: (Array[org.apache.spark.sql.Row], Int, DataFrame) => Unit =
-        (_, _, _) => ())
-      : (Array[org.apache.spark.sql.Row], Option[DataFrame]) = {
+      census: (Array[Row], Int, DataFrame) => Unit = (_, _, _) => ())
+      : DataFrame = {
     val bound = collectBound(maxStopGrams, budgetBytes)
-    val persisted = dfTable.persist()
+    // df >= 2 only: a df-1 gram cannot skew a bucket; ties break on the
+    // hash so the order is deterministic
+    val persisted = g
+      .select(explode(when(col("__g").isNotNull, col("__g"))).as("__gram"))
+      .groupBy(col("__gram")).agg(count(lit(1)).as("__df"))
+      .filter(col("__df") >= 2)
+      .persist()
     try {
       val rows =
-        if (bound == 0) Array.empty[org.apache.spark.sql.Row]
-        else persisted
-          .orderBy(col("__df").desc, col("__gram"))
-          .limit(bound)
-          .collect()
+        if (bound == 0) Array.empty[Row]
+        else persisted.orderBy(col("__df").desc, col("__gram"))
+          .limit(bound).collect()
       val totalDf2 =
         if (bound == 0 || rows.length == bound) persisted.count()
         else rows.length.toLong
@@ -148,17 +165,24 @@ object StopGrams {
       if (bind) bindSink(tag, bound, totalDf2, budgetBytes)
       else warnIfTruncated(tag, bound, budgetBytes, totalDf2)
       census(rows, bound, persisted)
-      (rows, if (bind) Some(persisted.localCheckpoint()) else None)
+      if (bind) joinPrefix(g, persisted.localCheckpoint(), tRelaxed)
+      else {
+        val stopBc = graft.functions.RarestPrefix.broadcastTable(
+          g.sparkSession,
+          rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1))
+        gramRows(g, ColumnBridge.col(graft.functions.RarestPrefix(
+          ColumnBridge.expr(col("__g")), tRelaxed, stopBc)))
+      }
     } finally { persisted.unpersist(); () }
   }
 
-  /** The budget-bind fallback (r16 judge directive #2): the PPJoin
+  /** The budget-bind fallback: the PPJoin
     * rare-first prefix computed DISTRIBUTED, with the exact corpus
     * frequency order — no driver table at any corpus size.
     *
     * Below the budget the broadcast table is strictly better (the
-    * reorder is a pure map); past it the r15 measurement showed the
-    * warn-and-degrade path's candidates grow with the uncovered share
+    * reorder is a pure map); past it the warn-and-degrade path's
+    * candidates grow with the uncovered share
     * (35–50% extra volume at a 4× overrun, unbounded beyond), because
     * grams past the cap fall back to hash order and prefixes stop
     * steering. This path instead annotates every doc-gram with its
@@ -179,12 +203,9 @@ object StopGrams {
   def joinPrefix(
       g: DataFrame, dfTable: DataFrame, tRelaxed: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val exploded = g.select(
-      col("__id"), size(col("__g")).cast("long").as("__n"),
-      explode(when(col("__g").isNotNull, col("__g"))).as("__gram"))
     val w = Window.partitionBy(col("__id"))
       .orderBy(col("__df").asc, col("__gram").asc)
-    exploded.join(dfTable, Seq("__gram"), "left")
+    gramRows(g, col("__g")).join(dfTable, Seq("__gram"), "left")
       .select(col("__id"), col("__n"), col("__gram"),
         coalesce(col("__df"), lit(1L)).as("__df"))
       .withColumn("__rk", row_number().over(w))

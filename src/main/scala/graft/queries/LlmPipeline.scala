@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.{Query, Tables}
 import graft.SparkEntry.oracleInputDir
 import graft.functions.{ColumnBridge, Hashes}
-import graft.operators.{Ann, Bm25, Contamination, CorpusMix, DedupPipeline, DupSpans, JaccardJoin, MinHashLsh, Multimodal, Pq, SemanticDedup, SeqPack, SimHash}
+import graft.operators.{Ann, Bm25, Contamination, CorpusMix, DedupPipeline, DupSpans, FilterVerify, HammingBand, JaccardJoin, MinHashLsh, Multimodal, Pq, SemanticDedup, SeqPack, SimHash}
 
 /** Training-data-pipeline operators over `documents` / `embeddings`
   * (deduplication, similarity search, text analysis, multimodal plumbing),
@@ -188,8 +188,8 @@ object LlmPipeline {
 
   /** q23: document fingerprinting — 128-bit hash of the normalized
     * text as the dedup key, so the distinct-shuffle carries 16 bytes
-    * per doc instead of the document body (widened from one xxhash64
-    * word per r16 directive #1 — at 10¹⁰ docs the 64-bit birthday
+    * per doc instead of the document body (128 bits, not one xxhash64
+    * word: at 10¹⁰ docs the 64-bit birthday
     * bound merges ~2.7 distinct texts and the count drifts from the
     * oracle's count-distinct-by-text; the null-guard matches the
     * oracle's NULL-ignoring count). */
@@ -226,35 +226,12 @@ object LlmPipeline {
     * the same spec rather than the oracle. */
   def q24SimhashNearDup(s: SparkSession, dir: String): DataFrame = {
     val docs = augmentedDocs(s, dir)
-    // signature once per doc, in its own projection (multi-referenced
-    // non-cheap alias → not collapsed); only (id, sig) ever shuffles —
-    // 16 bytes/row/band, never document text
-    val sigs = docs.select(col("doc_id"),
-      SimHash.simhashText(col("text"), 3).as("sig"))
-    val bands = (0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(col("sig"), b * 16).bitwiseAND(lit(0xffffL)).as("key"))
-    }
-    val bucketed = sigs
-      .select(col("doc_id"), col("sig"), explode(array(bands: _*)).as("bb"))
-    // ONE shuffle on the band key; candidate generation + Hamming verify
-    // fused in-bucket (HammingPairs — a lazy Generator, so only
-    // surviving pairs are ever allocated and buckets stream)
-    val pairs = ColumnBridge.col(graft.functions.HammingPairs(
-      ColumnBridge.expr(col("__members")), maxHamming = 12))
-    val cands = bucketed
-      .groupBy(col("bb"))
-      .agg(collect_list(struct(col("doc_id"), col("sig"))).as("__members"))
-      .filter(size(col("__members")) > 1)
-      .select(pairs.as(Seq("id_a", "id_b", "hamming")))
-      .dropDuplicates("id_a", "id_b")
-    // exact shingle-Jaccard verification joins text for CANDIDATES only
-    val rawA = docs.select(col("doc_id").as("id_a"), col("text").as("__t_a"))
-    val rawB = docs.select(col("doc_id").as("id_b"), col("text").as("__t_b"))
-    cands
-      .join(rawA, "id_a").join(rawB, "id_b")
-      .select(col("id_a"), col("id_b"), col("hamming"),
-        MinHashLsh.shingleJaccard(col("__t_a"), col("__t_b"), 3).as("jaccard"))
+    // banded 16-bit blocking: only (id, sig) ever shuffles, never text;
+    // Hamming verify fused in-bucket, exact Jaccard for candidates only
+    val cands = HammingBand.bandPairs(docs, "doc_id",
+      SimHash.simhashText(col("text"), 3), maxHamming = 12, bands = 4)
+    FilterVerify.verify(cands, docs, "doc_id", "text", "jaccard")(
+      MinHashLsh.shingleJaccard(_, _, 3))
       .filter(col("jaccard") >= 0.5)
   }
 
@@ -406,12 +383,8 @@ object LlmPipeline {
       .filter(col("shared_fps") >= 3)
     // text joined for candidates only — the oracle recomputes this
     // jaccard per returned pair, making the pair list driver-checkable
-    val rawA = docs.select(col("doc_id").as("id_a"), col("text").as("__t_a"))
-    val rawB = docs.select(col("doc_id").as("id_b"), col("text").as("__t_b"))
-    cands
-      .join(rawA, "id_a").join(rawB, "id_b")
-      .select(col("id_a"), col("id_b"), col("shared_fps"),
-        MinHashLsh.shingleJaccard(col("__t_a"), col("__t_b"), 3).as("jaccard"))
+    FilterVerify.verify(cands, docs, "doc_id", "text", "jaccard")(
+      MinHashLsh.shingleJaccard(_, _, 3))
   }
 
   /** q33: embedding near-dup via hyperplane LSH — the label-free scale
@@ -558,7 +531,7 @@ object LlmPipeline {
     * consumer re-runs the scan+union subtree — with the expensive
     * quality-gate predicate (tokenize + array_distinct) predicate-pushed
     * below the fan-out repartition, i.e. single-task on the unsplittable
-    * testdata file (r19 stage profile: nine ~0.3-0.5 s one-task stages
+    * testdata file (stage profile: nine ~0.3-0.5 s one-task stages
     * per q41 run, three per consumer). The lazy localCheckpoint
     * materializes the staged corpus once, at the union's full width; at
     * warehouse scale this is the standard "stage the raw+perturbed
@@ -590,7 +563,7 @@ object LlmPipeline {
     // behind it runs once, not once per consumer
     val kept = DedupPipeline.corpusVerdict(q.select("doc_id", "text"), "doc_id", "text")
       .filter(col("kept")).select("doc_id")
-    // localCheckpointWide (r19): the kept set is byte-small, so AQE pins
+    // localCheckpointWide: the kept set is byte-small, so AQE pins
     // it to 1-2 partitions and the contamination gram explode — the
     // most expensive consumer — would run nearly serial
     val keptDocs = Tables.localCheckpointWide(q.join(kept, "doc_id"))
@@ -668,7 +641,7 @@ object LlmPipeline {
     * SQL statement. */
   def q46CorpusPack(s: SparkSession, dir: String): DataFrame = {
     // ONE staged corpus shared by the q41 chain and the token-count
-    // scan (r19): a second buildCorpus here would re-run the 3-branch
+    // scan: a second buildCorpus here would re-run the 3-branch
     // scan+union subtree once per consumer
     val corpus = stagedCorpus(s, dir)
     val mixed = q41FromCorpus(s, corpus)
@@ -717,7 +690,7 @@ object LlmPipeline {
     // corpus rows = 2 × embeddings rows BY CONSTRUCTION (scaled is a 1:1
     // projection), so the cell count comes from ONE metadata-cheap count
     // of the raw parquet scan instead of executing the union + fan-out
-    // repartition of both branches just to count them (r20 q47 profile:
+    // repartition of both branches just to count them (q47 profile:
     // the union count was two scan stages + a 64-task merge before any
     // real work)
     val nRows = 2L * Tables(s, dir, "embeddings").count()
@@ -765,7 +738,7 @@ object LlmPipeline {
     * window merge. The synthetic corpus is template-generated, so ~96%
     * of docs carry naturally repeated 10-grams and coverage skews high
     * (L=30 still flags 80% — a corpus property, not a dial failure;
-    * measured r6); DupSpansSpec pins the discriminating semantics on
+    * measured); DupSpansSpec pins the discriminating semantics on
     * planted fixtures. */
   def q49DupSpans(s: SparkSession, dir: String): DataFrame =
     DupSpans.profile(augmentedDocs(s, dir), "doc_id", "text", L = 10)
@@ -816,7 +789,7 @@ object LlmPipeline {
       .unionByName(long.select((col("doc_id") + 3000000L).as("doc_id"),
         concat_ws(" ", reverse(split(col("text"), " "))).as("text")))
     val idx = incrementalIndexFor(s, dir, hist)
-    // no trailing orderBy (r19): the correctness gate is row-order-
+    // no trailing orderBy: the correctness gate is row-order-
     // insensitive (the driver hash-compares row-sorted frames — the q18
     // precedent) and the global sort's range-partitioning sampling pass
     // re-executes the verdict join subtree, ~doubling the probe.

@@ -50,30 +50,6 @@ abstract class TypedRowParserExpr extends UnaryExpression with CodegenFallback {
     * per row. */
   override lazy val deterministic: Boolean = false
 
-  /** Cache identity: two expression copies with equal params parse
-    * identically, so a repeated input can reuse the last result. */
-  protected def paramsTag: Any
-
-  protected def doParse(input: UTF8String): Any
-
-  /** Single-slot per-thread memo: Catalyst inlines the parse expression
-    * into both the null-drop Filter and the field Project (predicate
-    * pushdown substitutes the alias), so each row would be parsed twice.
-    * Row-pipelined execution evaluates both on the same thread
-    * back-to-back — the memo turns the second eval into a byte-compare.
-    * The input is cloned because scan buffers are reused across rows. */
-  final override def nullSafeEval(input: Any): Any = {
-    val u = input.asInstanceOf[UTF8String]
-    val slot = TypedRowParserExpr.slots.get()
-    val tag = paramsTag
-    if (slot.tag != tag || slot.input == null || !slot.input.equals(u)) {
-      slot.result = doParse(u)
-      slot.input = u.clone()
-      slot.tag = tag
-    }
-    slot.result
-  }
-
   protected def parseDateTime(key: String, s: String): Option[Long] = {
     if (s.isEmpty) return None
     knownLayouts.get(key) match {
@@ -85,16 +61,6 @@ abstract class TypedRowParserExpr extends UnaryExpression with CodegenFallback {
         }
     }
   }
-}
-
-object TypedRowParserExpr {
-  private final class Slot {
-    var input: UTF8String = _
-    var result: Any = _
-    var tag: Any = _
-  }
-  private val slots: ThreadLocal[Slot] =
-    ThreadLocal.withInitial(() => new Slot)
 }
 
 /** JSON message → typed row (the `MetricToRow` projection core,
@@ -116,9 +82,7 @@ case class JsonTypedRow(
   @transient private lazy val parser = new JsonParser
   @transient private lazy val emptyObj = JObj(mutable.ArrayBuffer.empty)
 
-  override protected def paramsTag: Any = (specs, timeUnit, timeZone)
-
-  override protected def doParse(input: UTF8String): Any = {
+  override def nullSafeEval(input: Any): Any = {
     val root: JObj = parser.parse(input.toString) match {
       case None => return null
       case Some(o: JObj) => o
@@ -276,10 +240,7 @@ case class CsvTypedRow(
   @transient private lazy val colIdx: Map[String, Int] = csvFormat.zipWithIndex.toMap
   private def delim: Char = if (delimiter.isEmpty) ',' else delimiter.charAt(0)
 
-  override protected def paramsTag: Any =
-    (specs, csvFormat, delimiter, timeUnit, timeZone)
-
-  override protected def doParse(input: UTF8String): Any = {
+  override def nullSafeEval(input: Any): Any = {
     val line = input.toString
     val fields = Rfc4180.split(line, delim) match {
       case Some(f) if f.length == csvFormat.length => f
